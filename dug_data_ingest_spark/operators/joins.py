@@ -124,10 +124,10 @@ def fuzzy_join_qgram(
 
     A length prefilter (|len(p) − len(c)| ≤ max_dist) prunes gram
     collisions before the distinct, and exact levenshtein verifies
-    inside blocks only. Unlike length-band blocking alone
-    (``join-fuzzy-name``), narrow length distributions don't degrade
-    candidate generation: hot buckets are rare GRAMS, and rarest-first
-    selection explicitly avoids them — the shared-shingle df-cap idea
+    inside blocks only. Unlike length-band blocking alone, narrow
+    length distributions don't degrade candidate generation: hot
+    buckets are rare GRAMS, and rarest-first selection explicitly
+    avoids them — the shared-shingle df-cap idea
     of ``ngram_jaccard_pairs`` (ext/dedup.py) turned into a lossless
     selection rule.
     """

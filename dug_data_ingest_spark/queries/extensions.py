@@ -495,16 +495,27 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
-    """The search parameter: vec_id 0's embedding (tiny driver-side
-    parameter fetch, not a data collect)."""
+def _query_row(spark: SparkSession, sf_dir: str, *cols: str):
+    """The search parameter row: vec_id 0's ``cols`` (tiny driver-side
+    parameter fetch, not a data collect). Raises ``ValueError`` when the
+    embeddings table has no vec_id = 0 row to search with."""
     row = (
         load(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") == 0)
-        .select("embedding")
+        .select(*cols)
         .first()
     )
-    return [float(x) for x in row[0]]
+    if row is None:
+        raise ValueError(
+            "similarity search needs the query row vec_id = 0 in "
+            f"{sf_dir}/embeddings.parquet, and it is missing"
+        )
+    return row
+
+
+def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
+    """The search parameter: vec_id 0's embedding."""
+    return [float(x) for x in _query_row(spark, sf_dir, "embedding")[0]]
 
 
 # RETIRED from the registry in round 7 (SCALE.md "retire redundant
@@ -517,8 +528,7 @@ def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
 # surface (ext/similarity.py::topk_bruteforce — the narrow-vector
 # comparison point, used by sim-ivf-recall's truth side below and by
 # tools/scale_smoke.py) and keeps its own oracle-parity test,
-# tests/test_sim_baseline.py, exactly like the join-fuzzy-name
-# precedent (tests/test_fuzzy_baseline.py).
+# tests/test_sim_baseline.py.
 _RETIRED_TOPK_BRUTEFORCE_ORACLE = """
     WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0)
     SELECT vec_id,
@@ -1963,7 +1973,7 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dug_data_ingest_spark.ext.similarity import hard_negatives
 
     emb = load(spark, sf_dir, "embeddings")
-    row = emb.filter(F.col("vec_id") == 0).select("embedding", "label").first()
+    row = _query_row(spark, sf_dir, "embedding", "label")
     return hard_negatives(
         emb, [float(x) for x in row[0]], row[1], k=10
     )

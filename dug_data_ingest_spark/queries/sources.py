@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dug_data_ingest_spark.operators.joins import edge_gen
 from dug_data_ingest_spark.queries import dec_money, load, query
 from dug_data_ingest_spark.sources import scratch_dir
 from dug_data_ingest_spark.sources.files import (
@@ -318,12 +319,11 @@ def snk_json_kgx(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_name").alias("name"),
         F.array(F.lit("biolink:Study")).alias("categories"),
     )
-    orders = load(spark, sf_dir, "orders")
-    edges = orders.select(
-        F.concat(F.lit("CUST:"), F.col("o_custkey").cast("string")).alias("subject"),
-        F.lit("biolink:related_to").alias("predicate"),
-        F.concat(F.lit("ORD:"), F.col("o_orderkey").cast("string")).alias("object"),
+    orders = load(spark, sf_dir, "orders").select(
+        F.concat(F.lit("CUST:"), F.col("o_custkey").cast("string")).alias("subj"),
+        F.concat(F.lit("ORD:"), F.col("o_orderkey").cast("string")).alias("obj"),
     )
+    edges = edge_gen(orders, "subj", "obj")
     write_kgx(nodes, edges, path)
     schema = T.StructType(
         [

@@ -1,13 +1,8 @@
-"""The correctness-window steering logic (queries/__init__.py): the
-whole regrade strategy rides on _driver_rows/_prioritized, so their
-rules are pinned here against synthetic CORRECTNESS files.
-
-Rules under test:
-- latest round wins per slug; err/rows/hash gates decide green
-- greens older than _STALE_AFTER_ROUNDS rotate back in, oldest first
-- failed / never-graded / _REGRADE_BEFORE_ROUND slugs lead the window
-- current greens trail, vintage-ordered so spare slots hit the oldest
-"""
+"""The registry's one ordering rule (queries/__init__.py): slugs sort by
+the round of their latest driver row, failed or never-graded slugs
+count as round -1, and ties keep registration order. The rule reads
+_driver_rows, whose gates are pinned here against synthetic
+CORRECTNESS files."""
 
 from __future__ import annotations
 
@@ -50,164 +45,21 @@ def test_rows_only_row_still_counts_green(tmp_path):
 
 
 def test_window_ordering_rules(tmp_path, monkeypatch):
-    # 6 slugs: never-graded n, failed f, stale s (r1 green), changed g
-    # (green but regrade-forced), recent r4 green a, recent r3 green b.
-    _write(tmp_path, 1, {"s": GOOD})
-    _write(tmp_path, 3, {"b": GOOD, "f": {**GOOD, "err": "x"}})
-    _write(tmp_path, 4, {"a": GOOD, "g": GOOD})
-    monkeypatch.setattr(Q, "_REGRADE_BEFORE_ROUND", {"g": 5})
-
-    real = Q._driver_rows
-
-    def rows_from_tmp(root=None):
-        return real(root=str(tmp_path))
-
-    monkeypatch.setattr(Q, "_driver_rows", rows_from_tmp)
-    order = Q._prioritized(["a", "b", "f", "g", "n", "s"])
-    # front: vintage -1 (f, g, n in cost/original order), then stale s;
-    # tail: current greens oldest-vintage-first (b r3 before a r4)
-    assert set(order[:3]) == {"f", "g", "n"}
-    assert order[3] == "s"
-    assert order[4:] == ["b", "a"]
-
-
-def test_deferred_new_slugs_wait_behind_regrades_then_lead(tmp_path, monkeypatch):
-    # window already planned: never-graded n leads, stale s regrades
-    # next. A slug d registered AFTER the round-6 freeze (marker 6)
-    # must trail BOTH while round 6 is in flight (max_round 5), and
-    # lead like any never-graded slug once CORRECTNESS_r06 lands.
-    _write(tmp_path, 1, {"s": GOOD})
-    _write(tmp_path, 5, {"a": GOOD})
-    monkeypatch.setattr(Q, "_DEFER_NEW_UNTIL_ROUND", {"d": 6})
+    # r3 greens b, t1, t2 (t1/t2 tie); r1 green s; failed f (its green
+    # r1 row is superseded by the r3 failure); never-graded n
+    _write(tmp_path, 1, {"s": GOOD, "f": GOOD})
+    _write(tmp_path, 3, {"b": GOOD, "t1": GOOD, "t2": GOOD, "f": {**GOOD, "err": "x"}})
     real = Q._driver_rows
     monkeypatch.setattr(Q, "_driver_rows", lambda root=None: real(root=str(tmp_path)))
 
-    order = Q._prioritized(["a", "d", "n", "s"])
-    assert order == ["n", "s", "d", "a"]  # d after the promised regrade
-
-    _write(tmp_path, 6, {"s": GOOD, "n": GOOD})  # round 6 graded
-    order = Q._prioritized(["a", "d", "n", "s"])
-    assert order[0] == "d"  # marker expired: ordinary never-graded lead
+    order = Q._ordered(["t2", "b", "n", "s", "t1", "f"])
+    assert order == ["n", "f", "s", "t2", "b", "t1"]
 
 
-def test_changed_pair_defers_like_a_late_registration(tmp_path, monkeypatch):
-    # A slug whose query/oracle pair changes AFTER the round-6 window
-    # froze gets _REGRADE_BEFORE_ROUND (its r5 green graded the old
-    # pair) AND a defer marker: it must trail the promised regrades
-    # while round 6 is in flight, then lead like any changed slug once
-    # CORRECTNESS_r06 lands.
-    _write(tmp_path, 1, {"s": GOOD})
-    _write(tmp_path, 5, {"a": GOOD, "c": GOOD})
-    monkeypatch.setattr(Q, "_REGRADE_BEFORE_ROUND", {"c": 7})
-    monkeypatch.setattr(Q, "_DEFER_NEW_UNTIL_ROUND", {"c": 6})
-    real = Q._driver_rows
-    monkeypatch.setattr(Q, "_driver_rows", lambda root=None: real(root=str(tmp_path)))
+def test_queries_and_oracles_share_the_order():
+    from dug_data_ingest_spark.queries import all_oracles, all_queries
 
-    order = Q._prioritized(["a", "c", "n", "s"])
-    # n (never-graded) leads, s (stale) regrades, THEN the deferred
-    # changed pair c, then the current green a
-    assert order == ["n", "s", "c", "a"]
-
-    _write(tmp_path, 6, {"s": GOOD, "n": GOOD})  # round 6 graded
-    order = Q._prioritized(["a", "c", "n", "s"])
-    assert order[0] == "c"  # marker expired: changed pair leads round 7
-
-
-# Max round the projection assertions below were written against. The
-# test copies ONLY history <= this round, so a driver dropping a newer
-# CORRECTNESS file into the repo root mid-round (as happened after the
-# round-7 close) cannot flip the fixture's assumptions. Bump it (and
-# re-derive the assertions) when retiring markers for an old round.
-_SNAPSHOT_MAX_ROUND = 7
-
-
-def test_window_projection_on_real_registry(tmp_path, monkeypatch):
-    # Project the next two driver windows against the real registry and
-    # a PINNED snapshot of the on-disk correctness history: with rounds
-    # <= _SNAPSHOT_MAX_ROUND graded, the registrations deferred TO that
-    # round must lead the next window, later-deferred ones must wait
-    # outside it, and after simulating that window all-green the
-    # later-deferred ones take the lead. Assertions are derived from
-    # the _DEFER_NEW_UNTIL_ROUND marker constants, so registering a new
-    # deferred slug updates the expectation automatically. Catches a
-    # defer-marker mistake BEFORE it costs a real round.
-    import glob
-    import os
-    import re
-    import shutil
-
-    from dug_data_ingest_spark.queries import all_queries
-
-    slugs = list(all_queries())  # force registration first
-    assert len(slugs) >= 200
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(Q.__file__)))
-    )
-    real_files = glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))
-    pinned = [
-        f
-        for f in real_files
-        if int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
-        <= _SNAPSHOT_MAX_ROUND
-    ]
-    assert pinned, repo  # guard against a wrong repo-root guess
-    for f in pinned:
-        shutil.copy(f, tmp_path)
-    real = Q._driver_rows
-    monkeypatch.setattr(
-        Q, "_driver_rows", lambda root=None: real(root=str(tmp_path))
-    )
-    _latest, mx = real(root=str(tmp_path))
-    # the snapshot round itself must have landed (else bump the pin)
-    assert mx == _SNAPSHOT_MAX_ROUND
-
-    lead = {
-        s for s, r in Q._DEFER_NEW_UNTIL_ROUND.items() if r == _SNAPSHOT_MAX_ROUND
-    }
-    waiting = {
-        s for s, r in Q._DEFER_NEW_UNTIL_ROUND.items() if r > _SNAPSHOT_MAX_ROUND
-    }
-    this_window = Q._prioritized(slugs)[:50]
-    # The whole fresh block — the snapshot-round registrations (markers
-    # just expired) PLUS any regrade-cutoff-invalidated pairs that are
-    # not deferred (they were already window fillers, so a cutoff equal
-    # to the in-flight round legitimately promotes them from the stale
-    # block into the fresh one) — leads the window. Derived from the
-    # marker constants and the snapshot rows (the vintage -1 rule:
-    # no ok row, or the row predates the slug's regrade cutoff), so a
-    # new cutoff entry moves the expectation with it. Merely-STALE
-    # greens are not fresh — they regrade behind this block.
-    def _never_or_invalidated(s):
-        rnd, ok = _latest.get(s, (0, False))
-        return not ok or rnd < Q._REGRADE_BEFORE_ROUND.get(s, 0)
-
-    fresh = {s for s in slugs if _never_or_invalidated(s)} - waiting
-    assert lead <= fresh and len(fresh) <= 50
-    assert set(this_window[: len(fresh)]) == fresh
-    # ...and later-deferred registrations wait outside the window
-    assert not (waiting & set(this_window))
-
-    _write(tmp_path, mx + 1, {s: GOOD for s in this_window})
-    next_window = Q._prioritized(slugs)[:50]
-    # marker expiry: the waiting registrations whose marker is REACHED
-    # at mx+1 become never-graded leads — alongside any slug whose
-    # regrade cutoff is still ahead of the simulated round (a cutoff
-    # beyond mx+1 means even the fresh simulated green graded a pair
-    # older than the cutoff's semantic change, so the slug
-    # legitimately stays at vintage -1; e.g. the r10 prefix-switch
-    # cutoffs under this r7 snapshot). Markers still in the future
-    # (e.g. a round-12 registration under this r7 snapshot) keep
-    # waiting — deferral is until the marker round, not one round.
-    expired = {
-        s for s in waiting if Q._DEFER_NEW_UNTIL_ROUND[s] <= mx + 1
-    }
-    still_deferred = waiting - expired
-    still_invalid = {
-        s for s in this_window if Q._REGRADE_BEFORE_ROUND.get(s, 0) > mx + 1
-    }
-    leads = expired | still_invalid
-    assert set(next_window[: len(leads)]) == leads
-    assert not (still_deferred & set(next_window))
-    # and nothing freshly graded re-enters the very next window
-    # (except the still-invalidated, which must)
-    assert set(next_window) & set(this_window) == still_invalid
+    slugs = list(all_queries())
+    oracles = list(all_oracles())
+    assert set(oracles) <= set(slugs)
+    assert oracles == [s for s in slugs if s in set(oracles)]

@@ -1,16 +1,15 @@
 """Report driver-correctness coverage of the query registry.
 
-Green state is now DERIVED at import time from the CORRECTNESS_r*.json
-files at the repo root (see `_driver_green` in
-dug_data_ingest_spark/queries/__init__.py) — nothing to paste anywhere.
-This tool just prints the derived view so a round's coverage plan can
-be sanity-checked:
+The registry order is derived at import time from the
+CORRECTNESS_r*.json files at the repo root (see `_driver_rows` in
+dug_data_ingest_spark/queries/__init__.py): slugs sort by the round of
+their latest driver row, failed or never-graded ones first. This tool
+prints that view so a round's window can be sanity-checked:
 
     python tools/absorb_correctness.py
 
-Output: green count, fresh (not-yet-green) slugs in the order the
-driver will grade them, and any slug whose LATEST driver row is a
-failure (regression to fix before the next round).
+Output: the first 50 slugs (the next driver window) with their round,
+and every slug whose latest driver row is a failure.
 """
 
 from __future__ import annotations
@@ -22,21 +21,17 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    from dug_data_ingest_spark.queries import _driver_green, all_queries
+    from dug_data_ingest_spark.queries import _driver_rows, all_queries
 
     ordered = list(all_queries())
-    # restrict to the live registry: retired slugs may still have
-    # green driver rows on disk
-    green = _driver_green() & set(ordered)
-    fresh = [s for s in ordered if s not in green]
-    print(f"{len(green)} driver-green, {len(fresh)} fresh of {len(ordered)}")
-    print("next driver window (first 50):")
+    latest, _ = _driver_rows()
+    print(f"next driver window (first 50 of {len(ordered)}):")
     for i, slug in enumerate(ordered[:50]):
-        mark = "green" if slug in green else "FRESH"
+        rnd, ok = latest.get(slug, (None, False))
+        mark = f"r{rnd}" if ok else ("never graded" if rnd is None else f"FAILED r{rnd}")
         print(f"  {i + 1:2d}. [{mark}] {slug}")
-    beyond = [s for s in fresh if s not in set(ordered[:50])]
-    if beyond:
-        print(f"fresh slugs NOT in this round's window ({len(beyond)}): {beyond}")
+    failed = [s for s in ordered if s in latest and not latest[s][1]]
+    print(f"latest row failed ({len(failed)}): {failed}")
 
 
 if __name__ == "__main__":
