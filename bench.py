@@ -80,8 +80,7 @@ HEADLINE = [
     "events-stickiness",
     "text-zipf-slope",
     "agg-approx-quantiles",
-    # join-fuzzy-name retired round 7 (reference-only baseline; see
-    # tests/test_fuzzy_baseline.py) — qgram is the production path
+    # qgram is the production fuzzy-name join
     "join-fuzzy-qgram",
     "olap-grouping-sets",
     "stream-stream-join",

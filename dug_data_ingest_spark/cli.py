@@ -208,11 +208,7 @@ def run_dedup(spark: SparkSession, args) -> None:
             pairs = minhash_jaccard_estimates(sig, cand).filter(
                 F.col("est_jaccard") >= args.threshold
             )
-        drop = non_canonical_ids(
-            # flag forces jumping from round 0; default None = adaptive
-            # (plain rounds first, jumping only if convergence drags)
-            pairs, jump=True if getattr(args, "jump", False) else None
-        ).localCheckpoint()
+        drop = non_canonical_ids(pairs).localCheckpoint()
         n_dropped = drop.count()
         survivors = docs.join(drop, "doc_id", "left_anti")
     survivors.write.mode("overwrite").parquet(f"{args.out}/survivors")
@@ -312,13 +308,6 @@ def main(argv: list[str] | None = None) -> None:
     dedup.add_argument(
         "--span-tokens", type=int, default=8, dest="span_tokens",
         help="substring strategy: window width in tokens",
-    )
-    dedup.add_argument(
-        "--jump", action="store_true",
-        help="cluster strategies: pointer-jump component labeling from "
-        "round 0 (O(log diameter) rounds) for known-deep pair graphs; "
-        "without the flag jumping engages adaptively once plain "
-        "propagation fails to converge in its first rounds",
     )
     dedup.add_argument("--out", required=True)
 

@@ -164,7 +164,6 @@ def gate_documents(
     docs: DataFrame,
     text_col: str = "text",
     reason_col: str = "reject_reason",
-    use_c4_page_rule: bool = True,
 ) -> DataFrame:
     """Quarantine-style gate over the NAMED public web-text filters:
     every input row comes back with ``reason_col`` = NULL (keep) or
@@ -177,8 +176,8 @@ def gate_documents(
     triage order, cheap-and-decisive first): NULL text →
     ``null_text``; the Gopher quality rules (functions/text.py::
     gopher_quality_flags) each under ``gopher:<flag>``; the Gopher
-    repetition rules under ``gopher_rep:<flag>``; optionally the C4
-    page gate under ``c4:page``. All pure Column expressions — the
+    repetition rules under ``gopher_rep:<flag>``; the C4 page gate
+    under ``c4:page``. All pure Column expressions — the
     gate is one projection; the word array is materialized ONCE and
     shared by the repetition shingles (the documented
     gopher_repetition_flags perf contract).
@@ -247,12 +246,10 @@ def gate_documents(
     ] + [
         f"{run_stats_raw_sql(shingles_of_sql(f'`{words_col}`', k))} AS `{c}`"
         for k, c in stat_cols.items()
+    ] + [
+        f"size(filter(`{lines_col}`, s -> {c4_keep_line_sql('s')}))"
+        f" AS `{c4n_col}`"
     ]
-    if use_c4_page_rule:
-        stage2.append(
-            f"size(filter(`{lines_col}`, s -> {c4_keep_line_sql('s')}))"
-            f" AS `{c4n_col}`"
-        )
     staged = stage1.selectExpr(*stage2)
 
     flags = null_safe_flags(
@@ -274,24 +271,23 @@ def gate_documents(
     )
     for name, flag in rep_flags.items():
         reason = reason.when(~flag, F.lit(f"gopher_rep:{name}"))
-    if use_c4_page_rule:
-        # the C4 page rule over the staged kept-line count — same
-        # semantics as c4_clean(text).page_ok (the keep rule is the
-        # shared c4_keep_line, thresholds identical)
-        page_ok = (
-            ~F.lower(text).contains("lorem ipsum")
-            & ~text.contains("{")
-            & (F.col(c4n_col) >= 3)
-        )
-        page_ok = F.when(text.isNull(), F.lit(None).cast("boolean")).otherwise(
-            F.coalesce(page_ok, F.lit(False))
-        )
-        reason = reason.when(~page_ok, F.lit("c4:page"))
+    # the C4 page rule over the staged kept-line count — same
+    # semantics as c4_clean(text).page_ok (the keep rule is the shared
+    # c4_keep_line, thresholds identical)
+    page_ok = (
+        ~F.lower(text).contains("lorem ipsum")
+        & ~text.contains("{")
+        & (F.col(c4n_col) >= 3)
+    )
+    page_ok = F.when(text.isNull(), F.lit(None).cast("boolean")).otherwise(
+        F.coalesce(page_ok, F.lit(False))
+    )
+    reason = reason.when(~page_ok, F.lit("c4:page"))
     return staged.withColumn(
         reason_col, reason.otherwise(F.lit(None).cast("string"))
     ).drop(
         words_col, ws_col, lines_col, paras_col, stl_col, stp_col,
-        *stat_cols.values(), *([c4n_col] if use_c4_page_rule else []),
+        *stat_cols.values(), c4n_col,
     )
 
 
@@ -647,7 +643,6 @@ def dsir_log_weights(
     n_buckets: int = 4096,
     alpha: float = 1.0,
     weight_col: str = "dsir_log_weight",
-    materialize_ids: bool = True,
 ) -> DataFrame:
     """``raw`` plus a ``weight_col`` importance log-weight per row:
     sum over the document's hashed n-grams of
@@ -675,10 +670,9 @@ def dsir_log_weights(
     and BOTH bucket distributions are counted in a single union job
     (side-tagged groupBy, bounded by 2*n_buckets rows) — the old form
     tokenized+md5-hashed raw twice (fit job + scoring plan) and ran
-    two sequential fit jobs. Set ``materialize_ids=False`` to keep
-    the stateless two-scan form (at 100 TB, prefer fitting on a
-    ``hash_sample`` slice per the contract above; the checkpoint
-    trades executor memory/disk for the repeated tokenize).
+    two sequential fit jobs. The checkpoint trades executor
+    memory/disk for the repeated tokenize; at 100 TB, fit on a
+    ``hash_sample`` slice per the contract above.
     """
     import math
 
@@ -686,11 +680,9 @@ def dsir_log_weights(
     ids_col = "__dsir_ids"
     while ids_col in raw.columns:
         ids_col += "_"
-    raw_ids = raw.withColumn(ids_col, ids)
-    if materialize_ids:
-        # lazy: the fit job below is the first action and materializes
-        # the snapshot in-line (one fewer blocking construction job)
-        raw_ids = raw_ids.localCheckpoint(eager=False)
+    # lazy: the fit job below is the first action and materializes the
+    # snapshot in-line (one fewer blocking construction job)
+    raw_ids = raw.withColumn(ids_col, ids).localCheckpoint(eager=False)
 
     # one fit job for both sides: explode the (checkpointed) raw ids
     # and the target's inline ids, tag, and count (bucket, side) groups

@@ -170,18 +170,6 @@ def minhash_signatures_wide(
     )
 
 
-def minhash_signatures(
-    doc_shingles_df: DataFrame, num_hashes: int = 16, id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, seed, min_hash) tall view of the wide signature — the
-    unpivot is a row-local ``stack``, not a shuffle."""
-    wide = minhash_signatures_wide(doc_shingles_df, num_hashes, id_col)
-    stack_args = ", ".join(f"{s}, h{s}" for s in range(num_hashes))
-    return wide.selectExpr(
-        id_col, f"stack({num_hashes}, {stack_args}) AS (seed, min_hash)"
-    )
-
-
 def minhash_band_keys(
     wide_signatures: DataFrame,
     num_hashes: int = 16,
@@ -195,9 +183,7 @@ def minhash_band_keys(
 
     ``rows_per_band`` must divide ``num_hashes`` — silently dropping
     the trailing hashes would lose recall the caller believes they
-    paid for (and diverge from minhash_bands, which would build a
-    shorter, far-more-collision-prone partial band from the same
-    signatures)."""
+    paid for."""
     if num_hashes % rows_per_band:
         raise ValueError(
             "minhash_band_keys: rows_per_band must divide num_hashes "
@@ -223,29 +209,6 @@ def minhash_band_keys(
     )
     return wide_signatures.select(F.col(id_col), F.explode(bands).alias("_b")).select(
         F.col(id_col), F.col("_b.band").alias("band"), F.col("_b.band_key").alias("band_key")
-    )
-
-
-def minhash_bands(
-    signatures: DataFrame, rows_per_band: int = 4, id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, band, band_key) from a tall (id, seed, min_hash) frame.
-    Kept for composition with externally-built signatures; the fused
-    path is minhash_band_keys(minhash_signatures_wide(...)). A
-    partial trailing band (seeds not divisible by rows_per_band)
-    would collide far more easily than the full bands — the fused
-    path rejects that shape, and composed callers should too."""
-    banded = signatures.withColumn(
-        "band", (F.col("seed") / rows_per_band).cast("int")
-    )
-    ordered_vals = F.transform(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("seed"), F.col("min_hash").alias("v")))
-        ),
-        lambda s: s.getField("v").cast("string"),
-    )
-    return banded.groupBy(id_col, "band").agg(
-        F.md5(F.array_join(ordered_vals, ",")).alias("band_key")
     )
 
 
@@ -645,8 +608,7 @@ def ngram_jaccard_pairs_prefix(
 
 
 def non_canonical_ids(
-    pairs: DataFrame, id_col: str = "doc_id", max_iters: int = 20,
-    jump: bool | None = None,
+    pairs: DataFrame, id_col: str = "doc_id", max_iters: int = 20
 ) -> DataFrame:
     """The drop set of a near-dup pair graph: every doc that belongs
     to a cluster but is not its canonical (min-id) member. Shared by
@@ -654,10 +616,9 @@ def non_canonical_ids(
     selection can never drift between them. The result is usually a
     tiny fraction of the corpus — broadcast it into the anti-join
     when the duplicate rate is known to be low; at permissive
-    thresholds leave it unhinted and let AQE decide. ``jump`` passes
-    through to duplicate_clusters for deep-chain pair graphs."""
+    thresholds leave it unhinted and let AQE decide."""
     return (
-        duplicate_clusters(pairs, id_col=id_col, max_iters=max_iters, jump=jump)
+        duplicate_clusters(pairs, id_col=id_col, max_iters=max_iters)
         .filter(F.col(id_col) != F.col("component"))
         .select(id_col)
     )
@@ -798,9 +759,9 @@ def simhash_near_pairs(
 
 
 # Adaptive-jump escalation point: plain-propagation rounds before
-# pointer jumping switches on under jump=None. 4 covers the measured
-# depth of real near-dup clusters (stars/chains of 2-4) with one round
-# of slack, so the common case never builds the jump join at all.
+# pointer jumping switches on. 4 covers the measured depth of real
+# near-dup clusters (stars/chains of 2-4) with one round of slack, so
+# the common case never builds the jump join at all.
 _AUTO_JUMP_AFTER = 4
 
 
@@ -810,7 +771,6 @@ def duplicate_clusters(
     b_col: str = "b",
     id_col: str = "doc_id",
     max_iters: int = 20,
-    jump: bool | None = None,
 ) -> DataFrame:
     """Connected components of the candidate-pair graph → one
     (doc_id, component) row per document that has a duplicate, where
@@ -831,11 +791,11 @@ def duplicate_clusters(
     scheduling overhead, not data volume, dominates once the pair
     graph is orders of magnitude smaller than the corpus.
 
-    ``jump`` controls pointer jumping, the deep-graph mechanism: a
-    jumping round additionally shortcuts every label through its
-    label's label (``comp ← min(comp, label[comp])``), so the reach
-    of the minimum roughly DOUBLES per round and convergence is
-    O(log diameter) rounds instead of O(diameter). A pathological
+    Pointer jumping is the deep-graph mechanism: a jumping round
+    additionally shortcuts every label through its label's label
+    (``comp ← min(comp, label[comp])``), so the reach of the minimum
+    roughly DOUBLES per round and convergence is O(log diameter)
+    rounds instead of O(diameter). A pathological
     near-dup CHAIN (A≈B≈C≈… — templated docs drifting one edit per
     step) has diameter ~n and would exhaust any fixed round budget
     under plain propagation; with jumping a million-link chain
@@ -845,17 +805,13 @@ def duplicate_clusters(
     star graph, pure waste there since stars converge in 2-3 plain
     rounds.
 
-    The default (``jump=None``) is ADAPTIVE: plain propagation for
-    the first ``_AUTO_JUMP_AFTER`` rounds — real near-dup clusters
-    are stars/chains of depth 2-4 and converge inside them, paying
-    zero jump cost — then jumping for every later round, so a deep
+    The schedule is ADAPTIVE: plain propagation for the first
+    ``_AUTO_JUMP_AFTER`` rounds — real near-dup clusters are
+    stars/chains of depth 2-4 and converge inside them, paying zero
+    jump cost — then jumping for every later round, so a deep
     component costs ~4 + log2(diameter) rounds total instead of
-    failing the budget. ``jump=True`` jumps from round 0 (known-deep
-    graphs); ``jump=False`` never jumps (bit-identical round
-    sequence to the pre-adaptive engine, and the mode the loud
-    non-convergence error is phrased for). All three reach the
-    identical fixpoint — model-pinned against union-find in
-    tests/test_blocking_properties.py.
+    failing the budget. The fixpoint is model-pinned against
+    union-find in tests/test_blocking_properties.py.
     """
     if max_iters < 1:
         raise ValueError("duplicate_clusters: max_iters must be >= 1")
@@ -884,7 +840,7 @@ def duplicate_clusters(
                 F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp"))
             ).alias("comp"),
         )
-        if jump is True or (jump is None and i >= _AUTO_JUMP_AFTER):
+        if i >= _AUTO_JUMP_AFTER:
             # comp values are always node ids (mins over node ids), so
             # label[comp] exists; the left join + coalesce only guards
             # the same-round self-reference.
@@ -910,15 +866,11 @@ def duplicate_clusters(
         # chain in the pair graph is longer than max_iters and the
         # components returned would be silently wrong (split clusters
         # → duplicates survive dedup). Fail loudly instead.
-        hint = (
-            "raise max_iters (jumping needs only ~4 + log2(diameter) rounds)"
-            if jump is not False
-            else "enable pointer jumping (jump=None/True) or raise max_iters"
-        )
         raise RuntimeError(
             f"duplicate_clusters did not converge in {max_iters} rounds "
             f"({changed} labels still changing); the pair graph has a "
-            f"component deeper than the round budget — {hint}."
+            "component deeper than the round budget — raise max_iters "
+            "(jumping needs only ~4 + log2(diameter) rounds)."
         )
     return labels.select(F.col("node").alias(id_col), F.col("comp").alias("component"))
 
@@ -1649,11 +1601,9 @@ def bloom_prefilter_exact(
     batch: DataFrame,
     history: DataFrame,
     key_col: str = "text",
-    id_col: str = "doc_id",
     m_bits: int = 1 << 23,
     k_hashes: int = 7,
     flag_col: str = "seen_exact",
-    words: list[int] | None = None,
 ) -> DataFrame:
     """The over-drop-safe escalation bloom_build's docstring promises,
     as code: probe the batch against the history bloom, then confirm
@@ -1662,22 +1612,16 @@ def bloom_prefilter_exact(
     confirm join; false negatives are structurally impossible), while
     the exact join's probe side shrinks to ~(dup_rate + fpr) of the
     batch instead of all of it. NULL keys flag NULL (unknown), as in
-    bloom_probe; pass a persisted ``words`` bitmap to skip the build
-    scan (the standing-ingest mode).
+    bloom_probe.
 
     Pinned in tests/test_bloom_dedup.py to be EXACTLY equal to the
     plain exact semi-join on every row — the bloom is a performance
     prefilter, never a semantics change. The confirm verdict is
     joined back BY THE KEY ITSELF (the distinct confirmed-key set),
-    never routed through ``id_col`` — duplicate or NULL ids cannot
-    fan out or lose their flag (``id_col`` is retained in the
-    signature for call-site compatibility but unused).
+    never through a row id — duplicate or NULL ids cannot fan out or
+    lose their flag.
     """
-    del id_col  # flags ride the key, not the row id — see docstring
-    if words is None:
-        words = bloom_build(
-            history, key_col=key_col, m_bits=m_bits, k_hashes=k_hashes
-        )
+    words = bloom_build(history, key_col=key_col, m_bits=m_bits, k_hashes=k_hashes)
 
     # suffix-until-free staging guard (the gate_documents convention)
     def _free(base: str) -> str:

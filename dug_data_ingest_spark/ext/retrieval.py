@@ -51,7 +51,6 @@ def bm25_scores(
     k1: float = K1,
     b: float = B,
     score_col: str = "bm25",
-    materialize: bool = True,
 ) -> DataFrame:
     """(id, score): Okapi BM25 of every document against the literal
     ``query_terms``:
@@ -76,10 +75,7 @@ def bm25_scores(
     projection both read that snapshot, so the corpus text is scanned
     once and never shuffled. The snapshot is lazy (the first consuming
     action materializes it in-line) and pins ~24 bytes/doc of executor
-    storage for the query's duration; pass ``materialize=False`` for
-    the stateless two-scan form (the dsir_log_weights
-    ``materialize_ids`` escape hatch) when a composition only needs
-    one pass or manages its own persistence.
+    storage for the query's duration.
     """
     if not query_terms:
         raise ValueError("bm25_scores: query_terms must be non-empty")
@@ -109,9 +105,7 @@ def bm25_scores(
     # never the text
     staged = worded.select(
         F.col(id_col), F.size(words).alias("__dl"), *tf_cols
-    )
-    if materialize:
-        staged = staged.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     stats = staged.agg(
         F.count(F.lit(1)).alias("__n"),
         F.avg("__dl").alias("__avgdl"),

@@ -512,7 +512,6 @@ def semantic_dedup(
     centroids: DataFrame | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    jump: bool | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): drop all-but-one of every group of embeddings
@@ -562,7 +561,7 @@ def semantic_dedup(
     )
     from dug_data_ingest_spark.ext.dedup import non_canonical_ids
 
-    drop = non_canonical_ids(pairs, id_col=id_col, jump=jump)
+    drop = non_canonical_ids(pairs, id_col=id_col)
     survivors = embeddings.join(drop, id_col, "left_anti")
     return survivors, drop
 

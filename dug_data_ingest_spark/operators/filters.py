@@ -68,9 +68,8 @@ def regex_id_extract(
     col: str,
     pattern: str,
     groups: Mapping[str, int],
-    keep_only_matches: bool = True,
 ) -> DataFrame:
-    """Extract named regex groups; optionally drop non-matching rows.
+    """Extract named regex groups; drop non-matching rows.
 
     Reference: dbGaP id parse ``^(phs.*?)(?:\\.(c\\d+))?$`` →
     (accession, consent)
@@ -81,9 +80,7 @@ def regex_id_extract(
     out = df
     for name, idx in groups.items():
         out = out.withColumn(name, F.regexp_extract(F.col(col), pattern, idx))
-    if keep_only_matches:
-        out = out.filter(F.col(col).rlike(pattern))
-    return out
+    return out.filter(F.col(col).rlike(pattern))
 
 
 def anti_membership(df: DataFrame, col: str, skip: Iterable) -> DataFrame:

@@ -860,7 +860,7 @@ def sim_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return t.crossJoin(f).select(
         "n_true",
         "n_found",
-        F.round(F.col("n_found") / F.col("n_true"), 4).alias("recall"),
+        F.round(F.try_divide("n_found", "n_true"), 4).alias("recall"),
     )
 
 
@@ -923,7 +923,7 @@ def sim_lsh_recall_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     return t.crossJoin(f).select(
         "n_true",
         "n_found",
-        F.round(F.col("n_found") / F.col("n_true"), 4).alias("recall"),
+        F.round(F.try_divide("n_found", "n_true"), 4).alias("recall"),
     )
 
 

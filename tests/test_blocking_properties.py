@@ -16,7 +16,7 @@ off-by-one on both sides:
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, example, given, settings
+from hypothesis import HealthCheck, assume, example, given, settings
 from hypothesis import strategies as st
 
 from dug_data_ingest_spark.ext.dedup import simhash_near_pairs
@@ -846,19 +846,30 @@ def test_retention_matrix_matches_naive_walk(spark, rows):
 
 
 # ---------------------------------------------------------------------------
-# Pointer-jumped connected components (ext/dedup.py::duplicate_clusters
-# jump=True): must reach the identical fixpoint as plain propagation
-# and as a union-find model on arbitrary graphs, and must converge in
-# O(log diameter) rounds on the deep chain that exhausts any fixed
-# plain-propagation budget — the DuckDB oracle grades only the plain
-# mode, so the jump path needs its own model pin.
+# Pointer-jumped connected components (ext/dedup.py::duplicate_clusters):
+# plain rounds first, jumping rounds after _AUTO_JUMP_AFTER. The graphs
+# below are deep enough that every example reaches the jumping rounds,
+# so both round kinds must land on the union-find fixpoint; and the
+# schedule must converge in O(log diameter) rounds on the deep chain
+# that exhausts any fixed plain-propagation budget.
 # ---------------------------------------------------------------------------
 
-_cc_edges = st.sets(
-    st.tuples(st.integers(0, 9), st.integers(0, 9)).filter(lambda e: e[0] != e[1]),
-    min_size=1,
-    max_size=12,
-)
+
+@st.composite
+def _deep_cc_edges(draw):
+    # a random path of 8-30 nodes (shuffled ids, so the min sits
+    # anywhere along it) plus a few random extra edges, beside a small
+    # random graph on ids 100-109 whose components must stay apart
+    n = draw(st.integers(8, 30))
+    order = draw(st.permutations(range(n)))
+    edges = {(order[i], order[i + 1]) for i in range(n - 1)}
+    extra = draw(
+        st.sets(st.tuples(st.integers(0, n - 1), st.integers(0, n - 1)), max_size=3)
+    )
+    other = draw(
+        st.sets(st.tuples(st.integers(100, 109), st.integers(100, 109)), max_size=6)
+    )
+    return edges | {e for e in extra | other if e[0] != e[1]}
 
 
 def _union_find_components(edges: set) -> dict[int, int]:
@@ -878,58 +889,60 @@ def _union_find_components(edges: set) -> dict[int, int]:
     return {n: find(n) for n in parent}
 
 
-@given(raw=_cc_edges)
-@example(raw={(0, 1), (1, 2), (3, 4)})
+def _min_label_eccentricity(edges: set) -> int:
+    # hops from each component's min id to its farthest member, max
+    # over components: plain propagation reaches one hop per round
+    adj: dict[int, set] = {}
+    for u, v in edges:
+        adj.setdefault(u, set()).add(v)
+        adj.setdefault(v, set()).add(u)
+    ecc = 0
+    for root in set(_union_find_components(edges).values()):
+        dist, queue = {root: 0}, [root]
+        for x in queue:  # BFS: the list grows while it is walked
+            for w in adj[x]:
+                if w not in dist:
+                    dist[w] = dist[x] + 1
+                    queue.append(w)
+        ecc = max(ecc, max(dist.values()))
+    return ecc
+
+
+@given(raw=_deep_cc_edges())
+@example(raw={(i, i + 1) for i in range(9)} | {(2, 4), (100, 101), (103, 102)})
 @settings(
     max_examples=10,
     deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
+    suppress_health_check=[
+        HealthCheck.function_scoped_fixture,
+        HealthCheck.filter_too_much,
+    ],
 )
 def test_pointer_jump_components_match_union_find(spark, raw):
-    from dug_data_ingest_spark.ext.dedup import duplicate_clusters
+    from dug_data_ingest_spark.ext.dedup import _AUTO_JUMP_AFTER, duplicate_clusters
 
+    # the initial label covers 1 hop and each plain round 1 more: past
+    # _AUTO_JUMP_AFTER + 1 hops, round _AUTO_JUMP_AFTER still changes
+    # labels and the jumping rounds run
+    assume(_min_label_eccentricity(raw) > _AUTO_JUMP_AFTER + 1)
     pairs = spark.createDataFrame(sorted(raw), "a bigint, b bigint")
     want = set(_union_find_components(raw).items())
-    got_jump = {
-        (r["doc_id"], r["component"])
-        for r in duplicate_clusters(pairs, jump=True).collect()
-    }
-    got_plain = {
+    got = {
         (r["doc_id"], r["component"])
         for r in duplicate_clusters(pairs).collect()
     }
-    assert got_jump == want
-    assert got_plain == want
+    assert got == want
 
 
 def test_pointer_jump_converges_on_a_deep_chain(spark):
-    # A 64-link chain has diameter 64: plain propagation moves the min
-    # one hop per round and must exhaust a 6-round budget (loudly, per
-    # the non-convergence contract); pointer jumping roughly doubles
-    # the min's reach per round and converges well inside it.
+    # A 64-link chain has diameter 64. Plain propagation moves the min
+    # one hop per round, so a 4-round budget (plain rounds only, below
+    # the escalation point) exhausts loudly, per the non-convergence
+    # contract. Pointer jumping roughly doubles the min's reach per
+    # round: ≈4 plain + log2(64) jumping + the zero-change
+    # confirmation round fit inside 14.
     import pytest as _pytest
 
-    from dug_data_ingest_spark.ext.dedup import duplicate_clusters
-
-    chain = [(i, i + 1) for i in range(64)]
-    pairs = spark.createDataFrame(chain, "a bigint, b bigint")
-    got = {
-        (r["doc_id"], r["component"])
-        for r in duplicate_clusters(pairs, max_iters=10, jump=True).collect()
-    }
-    assert got == {(i, 0) for i in range(65)}
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        duplicate_clusters(pairs, max_iters=6, jump=False).collect()
-
-
-def test_adaptive_jump_rescues_a_deep_chain_within_default_budget(spark):
-    # jump=None (the default) runs _AUTO_JUMP_AFTER plain rounds, then
-    # escalates to jumping: the same 64-link chain that exhausts a
-    # 6-round budget converges under the adaptive default well inside
-    # the default 20 (≈4 plain + log2(64) jumping + the zero-change
-    # confirmation round). A shallow star under the same default never
-    # reaches the escalation point, so the common case pays nothing —
-    # that's pinned by convergence within a 4-round jump=False budget.
     from dug_data_ingest_spark.ext.dedup import duplicate_clusters
 
     chain = [(i, i + 1) for i in range(64)]
@@ -939,11 +952,29 @@ def test_adaptive_jump_rescues_a_deep_chain_within_default_budget(spark):
         for r in duplicate_clusters(pairs, max_iters=14).collect()
     }
     assert got == {(i, 0) for i in range(65)}
+    with _pytest.raises(RuntimeError, match="did not converge"):
+        duplicate_clusters(pairs, max_iters=4).collect()
+
+
+def test_adaptive_jump_rescues_a_deep_chain_within_default_budget(spark):
+    # A 256-link chain would need ~256 plain rounds; the adaptive
+    # schedule finishes it inside the default 20-round budget. A
+    # shallow star never reaches the escalation point, so the common
+    # case pays nothing: it converges within 4 plain rounds.
+    from dug_data_ingest_spark.ext.dedup import duplicate_clusters
+
+    chain = [(i, i + 1) for i in range(256)]
+    pairs = spark.createDataFrame(chain, "a bigint, b bigint")
+    got = {
+        (r["doc_id"], r["component"])
+        for r in duplicate_clusters(pairs).collect()
+    }
+    assert got == {(i, 0) for i in range(257)}
 
     star = [(0, j) for j in range(1, 6)]
     spairs = spark.createDataFrame(star, "a bigint, b bigint")
     got_star = {
         (r["doc_id"], r["component"])
-        for r in duplicate_clusters(spairs, max_iters=4, jump=False).collect()
+        for r in duplicate_clusters(spairs, max_iters=4).collect()
     }
     assert got_star == {(j, 0) for j in range(6)}

@@ -1,19 +1,38 @@
-"""An empty embeddings table has no vec_id = 0 query row: the
-similarity slugs that search with it raise a typed ValueError naming
-that row instead of failing on ``None[0]``."""
+"""An empty embeddings table is a defined input for the similarity
+slugs: those that search with the vec_id = 0 query row raise a typed
+ValueError naming that row instead of failing on ``None[0]``, and the
+recall gauges match their oracle's (0, 0, NULL) row instead of raising
+a divide-by-zero."""
 
 from __future__ import annotations
 
+import duckdb
 import pyarrow.parquet as pq
 import pytest
 
-from dug_data_ingest_spark.queries import all_queries
-from tests.conftest import TEST_SF_DIR
+from dug_data_ingest_spark.queries import all_oracles, all_queries
+from tests.conftest import TEST_SF_DIR, assert_frames_match
+
+
+@pytest.fixture
+def empty_dir(tmp_path):
+    schema = pq.read_schema(f"{TEST_SF_DIR}/embeddings.parquet")
+    pq.write_table(schema.empty_table(), tmp_path / "embeddings.parquet")
+    return tmp_path
 
 
 @pytest.mark.parametrize("slug", ["sim-ivf-topk", "sim-hard-negatives"])
-def test_empty_embeddings_raise_typed_error(spark, tmp_path, slug):
-    schema = pq.read_schema(f"{TEST_SF_DIR}/embeddings.parquet")
-    pq.write_table(schema.empty_table(), tmp_path / "embeddings.parquet")
+def test_empty_embeddings_raise_typed_error(spark, empty_dir, slug):
     with pytest.raises(ValueError, match="vec_id = 0"):
-        all_queries()[slug](spark, str(tmp_path))
+        all_queries()[slug](spark, str(empty_dir))
+
+
+@pytest.mark.parametrize("slug", ["sim-lsh-recall", "sim-lsh-recall-banded"])
+def test_empty_embeddings_recall_matches_oracle(spark, empty_dir, slug):
+    df = all_queries()[slug](spark, str(empty_dir))
+    with duckdb.connect() as con:
+        con.execute(
+            f"CREATE VIEW embeddings AS SELECT * FROM '{empty_dir}/embeddings.parquet'"
+        )
+        assert_frames_match(df, con.sql(all_oracles()[slug]), slug)
+    assert [tuple(r) for r in df.collect()] == [(0, 0, None)]

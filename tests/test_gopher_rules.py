@@ -291,35 +291,40 @@ def test_gate_documents_names_the_first_failing_rule(spark):
         "It was quite the chase to behold on that morning, with dust "
         "flying and hens scattering everywhere across the yard."
     )
+    # one sentence per line: 5 kept C4 lines, so every rule passes
+    prose_lines = "\n".join(
+        [
+            "The quick brown fox jumps over the lazy dog near the barn.",
+            "It was quite the chase to behold on that cold morning.",
+            "Dust was flying and hens were scattering across the yard.",
+            "The farmer who wanted to be rid of all foxes came running.",
+            "By noon the fox had long since vanished into the woods again.",
+        ]
+    )
     docs = spark.createDataFrame(
         [
-            (0, prose_50),                          # keeps (c4 off below)
+            # one long line ending in '.': n_kept_lines = 1 < 3
+            (0, prose_50),                          # c4:page
             (1, None),                              # null_text
             (2, "too short with the and of."),      # gopher:n_words_ok
             (3, ("the same exact line of prose with words repeated today.\n" * 40).strip()),
+            (4, prose_lines),                       # keeps
         ],
         "doc_id int, text string",
     )
-    out = gate_documents(docs, use_c4_page_rule=False)
+    out = gate_documents(docs)
     reasons = {r["doc_id"]: r["reject_reason"] for r in out.collect()}
-    assert reasons[0] is None
+    assert reasons[0] == "c4:page"
     assert reasons[1] == "null_text"
     assert reasons[2] == "gopher:n_words_ok"
     assert reasons[3].startswith("gopher_rep:dup_line"), reasons[3]
+    assert reasons[4] is None
     # the staging columns must not leak
     assert set(out.columns) == {"doc_id", "text", "reject_reason"}
 
     valid, quarantine = split_valid_quarantine(out)
-    assert {r["doc_id"] for r in valid.collect()} == {0}
-    assert {r["doc_id"] for r in quarantine.collect()} == {1, 2, 3}
-
-    # with the C4 page rule on, prose without terminal-punctuated
-    # 5-word lines... doc 0 HAS terminal punctuation and 3+ kept
-    # sentences only if line-split sees them — it is one long line
-    # ending in '.', so n_kept_lines = 1 < 3 -> c4:page
-    with_c4 = gate_documents(docs)
-    r0 = {r["doc_id"]: r["reject_reason"] for r in with_c4.collect()}[0]
-    assert r0 == "c4:page"
+    assert {r["doc_id"] for r in valid.collect()} == {4}
+    assert {r["doc_id"] for r in quarantine.collect()} == {0, 1, 2, 3}
 
 
 def test_gate_documents_preserves_colliding_staging_columns(spark):

@@ -1,6 +1,6 @@
 """Direct pins for the kept-for-composition operator surface — the
 public functions the registered queries happen to inline rather than
-call (group_collect, rollup_counts, semi_join, minhash_bands). They
+call (group_collect, rollup_counts, semi_join). They
 are API, so they get their own value pins: "unused by the graded
 queries" must never decay into "untested".
 """
@@ -78,34 +78,3 @@ def test_semi_join_equals_native_left_semi(spark):
     want = sorted(map(tuple, left.join(right, "k", "left_semi").collect()))
     assert got == want == [(2, "b"), (3, "c")]
 
-
-def test_minhash_bands_tall_equals_fused_wide_path(spark):
-    # minhash_bands exists for composition with externally-built tall
-    # (id, seed, min_hash) signatures; its band keys must be
-    # byte-identical to the fused wide path on the same signature, or
-    # composed pipelines would bucket differently than the graded one.
-    from dug_data_ingest_spark.ext.dedup import (
-        doc_shingles,
-        minhash_band_keys,
-        minhash_bands,
-        minhash_signatures_wide,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"w{i} x y z common tail {i % 3}") for i in range(20)],
-        "doc_id int, text string",
-    )
-    wide = minhash_signatures_wide(doc_shingles(docs)).localCheckpoint()
-    want = {
-        (r["doc_id"], r["band"], r["band_key"])
-        for r in minhash_band_keys(wide).collect()
-    }
-    tall = wide.selectExpr(
-        "doc_id",
-        "stack(16, " + ", ".join(f"{s}, h{s}" for s in range(16)) + ") as (seed, min_hash)",
-    )
-    got = {
-        (r["doc_id"], r["band"], r["band_key"])
-        for r in minhash_bands(tall).collect()
-    }
-    assert got == want

@@ -1,6 +1,7 @@
-"""Isolated min-of-N pin for one (or a few) bench queries.
+"""Isolated min-of-N pin for one (or a few) bench queries: wall time
+AND process-tree CPU-seconds per rep.
 
-    python tools/pin_query.py SLUG [SLUG ...] [--reps N] [--sf DIR]
+    python tools/pin_query.py SLUG [SLUG ...] [--reps N] [--sf DIR] [--noop]
 
 Why this exists: a full bench run times ~120 queries back-to-back, so
 one query's number can be contaminated by its neighbours' GC / shuffle
@@ -18,6 +19,15 @@ spot tools/noop_audit.py exposes), so for a projection-family slug
 pass ``--noop`` to time a noop-sink write instead: every output
 column is materialized and the pin reports the operator's honest
 per-row cost (r12 ADVICE).
+
+Wall time is only comparable within a quiet window (calib < 0.35):
+the shared host's other tenants inflate it 2-10x. The CPU-seconds
+this process family burns per rep measure the PLAN'S work almost
+independently of who else is on the box (descheduled tasks consume no
+CPU), so use them to compare plans across any window. In local mode
+the executors live in the driver JVM, so the tree's utime+stime delta
+around a rep is the whole Spark-side cost, Python workers
+(mapInPandas/Arrow UDFs) included.
 """
 
 from __future__ import annotations
@@ -28,6 +38,46 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+_CLK = os.sysconf("SC_CLK_TCK")
+
+
+def _proc_cpu(pid: int) -> float:
+    """utime+stime (+children, which for the JVM covers any forked
+    helpers) of one pid, in seconds."""
+    try:
+        with open(f"/proc/{pid}/stat") as fh:
+            parts = fh.read().rsplit(") ", 1)[1].split()
+        # fields 13..16 (0-based after comm): utime stime cutime cstime
+        return sum(int(parts[i]) for i in (11, 12, 13, 14)) / _CLK
+    except OSError:
+        return 0.0
+
+
+def _tree_cpu(root: int) -> float:
+    """CPU-seconds of root + all LIVE descendants (dead children are
+    folded into cutime/cstime by _proc_cpu). Python workers are
+    long-lived under spark.python.worker.reuse, so live traversal
+    catches them."""
+    pids = {root}
+    by_ppid: dict[int, list[int]] = {}
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open(f"/proc/{d}/stat") as fh:
+                ppid = int(fh.read().rsplit(") ", 1)[1].split()[1])
+            by_ppid.setdefault(ppid, []).append(int(d))
+        except OSError:
+            continue
+    frontier = [root]
+    while frontier:
+        p = frontier.pop()
+        for c in by_ppid.get(p, ()):
+            if c not in pids:
+                pids.add(c)
+                frontier.append(c)
+    return sum(_proc_cpu(p) for p in pids)
 
 
 def _calib(spark) -> dict[str, float]:
@@ -88,6 +138,7 @@ def main(argv: list[str]) -> int:
             df.count()
 
     spark = get_spark("pin-query")
+    me = os.getpid()
     qs = all_queries()
     out: dict[str, dict] = {
         "sink": "noop" if noop else "count",
@@ -96,15 +147,20 @@ def main(argv: list[str]) -> int:
     for slug in slugs:
         fn = qs[slug]
         _run(fn(spark, sf_dir))  # warmup (codegen/JIT)
-        times = []
+        times, cpus = [], []
         for _ in range(reps):
+            c0 = _tree_cpu(me)
             t0 = time.perf_counter()
             _run(fn(spark, sf_dir))  # fresh plan instance per rep
             times.append(round(time.perf_counter() - t0, 3))
+            cpus.append(round(_tree_cpu(me) - c0, 2))
         out[slug] = {
             "reps": times,
             "min": min(times),
             "median": sorted(times)[len(times) // 2],
+            "cpu": cpus,
+            "cpu_min": min(cpus),
+            "cpu_median": sorted(cpus)[len(cpus) // 2],
         }
     out["calib_after"] = _calib(spark)
     print(json.dumps(out))

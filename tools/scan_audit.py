@@ -49,9 +49,7 @@ KNOWN = {
     "dedup-paragraph",
     # r11: history is scanned twice (once into the m/64-bounded bloom
     # bitmap aggregate, once for the exact-confirm semi-join keys —
-    # the confirm is the operator's whole point) + the batch scan.
-    # In the standing-ingest deployment the bitmap is persisted
-    # (words param), so the first history scan amortizes to zero;
+    # the confirm is the operator's whole point) + the batch scan;
     # here batch and history happen to be slices of the same table.
     "dedup-bloom-exact",
     # r12: the slug IS a self-audit — it re-runs the within-cell pair
