@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
@@ -234,6 +235,56 @@ def noisy_host_flags(result: dict) -> dict:
     return {}
 
 
+def history_tags(cpus: int) -> dict:
+    """What a BENCH_HISTORY line records beyond the stdout result:
+    the session's core count and the checkout's git sha (None outside
+    a git checkout). Walls compare only at equal ``cpus``."""
+    try:
+        sha = subprocess.run(
+            ["git", "rev-parse", "HEAD"],
+            cwd=os.path.dirname(os.path.abspath(__file__)),
+            capture_output=True, text=True, check=True,
+        ).stdout.strip()
+    except (OSError, subprocess.CalledProcessError):
+        sha = None
+    return {"cpus": cpus, "git_sha": sha}
+
+
+def best_prior(prior: list, timings: dict, sf_val, cpus: int, cur_calib):
+    """The prior run this one compares best against, as
+    ``(adjusted_ratio, n_shared, prior_total, raw_ratio)``, or None.
+
+    Only runs at the same sf AND the same core count pair up (a line
+    without ``cpus`` is skipped: its core count is unknown). The
+    comparison is restricted to the queries BOTH runs timed (a
+    108-query total vs a 35-query-era total is apples-to-oranges —
+    the round-6 false alarm) and normalized by the calib_spark
+    machine-speed anchor when both runs carry one (the shared host
+    drifts 1.3-1.8x under tenant load)."""
+    best = None
+    for p in prior:
+        if (
+            p.get("sf") != sf_val
+            or p.get("cpus") != cpus
+            or not isinstance(p.get("queries"), dict)
+        ):
+            continue
+        shared = [q for q in timings if q in p["queries"]]
+        # demand real overlap: a comparison over a sliver of the
+        # current set says nothing about this run
+        if len(shared) < max(10, len(timings) // 2):
+            continue
+        pri_t = sum(p["queries"][q] for q in shared)
+        if pri_t <= 0:
+            continue
+        raw = sum(timings[q] for q in shared) / pri_t
+        p_calib = p.get("calib_spark_sec")
+        adj = raw / (cur_calib / p_calib) if cur_calib and p_calib else raw
+        if best is None or adj < best[0]:
+            best = (adj, len(shared), round(pri_t, 3), round(raw, 3))
+    return best
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
@@ -345,14 +396,10 @@ def main() -> None:
 
     # Round-over-round stability: append every run to a history log
     # (per-query minima are the stable signal; totals swing with
-    # machine load — see SCALE.md "Bench posture") and flag on stderr
-    # only on an HONEST regression signal: the comparison against each
-    # prior run is restricted to the queries BOTH runs timed (a
-    # 108-query total vs a 35-query-era total is apples-to-oranges —
-    # the round-6 false alarm) and normalized by the calib_spark
-    # machine-speed anchor when both runs carry one (the shared host
-    # drifts 1.3-1.8x under tenant load). stdout stays exactly one
-    # JSON line for the driver.
+    # machine load — see SCALE.md "Bench posture"), tagged with the
+    # core count and git sha, and flag on stderr only on an HONEST
+    # regression signal against a comparable prior run (best_prior).
+    # stdout stays exactly one JSON line for the driver.
     hist_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                              "BENCH_HISTORY.jsonl")
     try:
@@ -360,33 +407,21 @@ def main() -> None:
         if os.path.exists(hist_path):
             with open(hist_path) as fh:
                 prior = [json.loads(ln) for ln in fh if ln.strip()]
+        cpus = spark.sparkContext.defaultParallelism
         with open(hist_path, "a") as fh:
-            fh.write(json.dumps({**result, "ts": int(time.time())}) + "\n")
-        cur_calib = result.get("calib_spark_sec")
-        best = None  # (adjusted_ratio, n_shared, prior_total, raw_ratio)
-        for p in prior:
-            if p.get("sf") != sf_val or not isinstance(p.get("queries"), dict):
-                continue
-            shared = [q for q in timings if q in p["queries"]]
-            # demand real overlap: a comparison over a sliver of the
-            # current set says nothing about this run
-            if len(shared) < max(10, len(timings) // 2):
-                continue
-            pri_t = sum(p["queries"][q] for q in shared)
-            if pri_t <= 0:
-                continue
-            raw = sum(timings[q] for q in shared) / pri_t
-            p_calib = p.get("calib_spark_sec")
-            adj = raw / (cur_calib / p_calib) if cur_calib and p_calib else raw
-            if best is None or adj < best[0]:
-                best = (adj, len(shared), round(pri_t, 3), round(raw, 3))
+            fh.write(json.dumps(
+                {**result, **history_tags(cpus), "ts": int(time.time())}
+            ) + "\n")
+        best = best_prior(
+            prior, timings, sf_val, cpus, result.get("calib_spark_sec")
+        )
         if best is not None and best[0] > 2:
             print(
                 f"WARNING: same-set bench regression: {best[3]}x raw, "
                 f"{round(best[0], 3)}x after calib_spark machine-speed "
                 f"adjustment, vs the best prior run sharing {best[1]} "
-                f"queries ({best[2]}s) at sf={sf_val}; check per-query "
-                f"times in {hist_path} before trusting.",
+                f"queries ({best[2]}s) at sf={sf_val}, {cpus} cores; "
+                f"check per-query times in {hist_path} before trusting.",
                 file=sys.stderr,
             )
     except Exception:  # noqa: BLE001 — a corrupt/truncated history line

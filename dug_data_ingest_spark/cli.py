@@ -10,6 +10,10 @@ Inputs are parquet (or CSV with --csv, using the declared schemas);
 outputs land under --out as parquet/CSV/JSON exactly as the reference
 produced them (XML docs, variable index, KGX graph, summary
 scoreboard, pivot report).
+
+The bdc and heal jobs write their independent outputs as concurrent
+Spark jobs (``sources.files.write_all``): each output is a small job
+of a few tasks, so written one at a time they leave most cores idle.
 """
 
 from __future__ import annotations
@@ -53,18 +57,27 @@ def _read_csv_nested(spark: SparkSession, path: str, schema) -> DataFrame:
     return df
 
 
+def _write_parquet(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").parquet(path)
+
+
 def run_bdc(spark: SparkSession, args) -> None:
     from dug_data_ingest_spark.plans.bdc import bdc_pipeline
     from dug_data_ingest_spark.plans.fixtures import GEN3_SCHEMA, PICSURE_SCHEMA
-    from dug_data_ingest_spark.sources.files import write_csv
+    from dug_data_ingest_spark.sources.files import write_all, write_csv
 
     out = bdc_pipeline(
         _read(spark, args.gen3, args.csv, GEN3_SCHEMA),
         _read(spark, args.picsure, args.csv, PICSURE_SCHEMA),
     )
-    out["xml_docs"].write.mode("overwrite").parquet(f"{args.out}/dbgap_xml")
-    write_csv(out["summary"], f"{args.out}/processing_summary", single_file=True)
-    write_csv(out["quarantine"], f"{args.out}/quarantine", single_file=True)
+    write_all(
+        spark,
+        ("dbgap_xml", lambda: _write_parquet(out["xml_docs"], f"{args.out}/dbgap_xml")),
+        ("processing_summary", lambda: write_csv(
+            out["summary"], f"{args.out}/processing_summary", single_file=True)),
+        ("quarantine", lambda: write_csv(
+            out["quarantine"], f"{args.out}/quarantine", single_file=True)),
+    )
     out["scoreboard"].show(truncate=False)
 
 
@@ -75,7 +88,7 @@ def run_heal(spark: SparkSession, args) -> None:
         HEAL_STUDIES_SCHEMA,
     )
     from dug_data_ingest_spark.plans.heal import heal_pipeline
-    from dug_data_ingest_spark.sources.files import write_csv, write_kgx
+    from dug_data_ingest_spark.sources.files import write_all, write_csv, write_kgx
 
     # CSV cannot carry the studies' MAP or the fields' ARRAY/MAP
     # columns — in --csv mode those ride as JSON strings and are
@@ -92,10 +105,15 @@ def run_heal(spark: SparkSession, args) -> None:
         fields,
         _read(spark, args.mapping, args.csv, HDP_MAPPING_SCHEMA),
     )
-    out["xml_docs"].write.mode("overwrite").parquet(f"{args.out}/dbgap_xml")
-    write_csv(out["variable_index"], f"{args.out}/variable_index", single_file=True)
-    write_kgx(out["kgx_nodes"], out["kgx_edges"], f"{args.out}/kgx")
-    write_csv(out["stray_dds"], f"{args.out}/stray_dds", single_file=True)
+    write_all(
+        spark,
+        ("dbgap_xml", lambda: _write_parquet(out["xml_docs"], f"{args.out}/dbgap_xml")),
+        ("variable_index", lambda: write_csv(
+            out["variable_index"], f"{args.out}/variable_index", single_file=True)),
+        ("kgx", lambda: write_kgx(out["kgx_nodes"], out["kgx_edges"], f"{args.out}/kgx")),
+        ("stray_dds", lambda: write_csv(
+            out["stray_dds"], f"{args.out}/stray_dds", single_file=True)),
+    )
 
 
 def run_index(spark: SparkSession, args) -> None:

@@ -348,8 +348,12 @@ def snk_object_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders")
     write_partitioned(orders, path, "o_orderstatus")
     # Partition-pruned read-back: only the o_orderstatus=O directory
-    # is scanned (dynamic partition pruning at scale).
-    back = spark.read.parquet(path).filter(F.col("o_orderstatus") == "O")
+    # is scanned (dynamic partition pruning at scale). The read takes
+    # the written schema: an empty write leaves no part file to infer
+    # one from.
+    back = spark.read.schema(orders.schema).parquet(path).filter(
+        F.col("o_orderstatus") == "O"
+    )
     return back.select(
         "o_orderkey",
         "o_custkey",
@@ -716,9 +720,10 @@ _EVENTS_PARTITIONED_WRITTEN: set[str] = set()
 
 def _events_partitioned(
     spark: SparkSession, sf_dir: str, name: str, memo: bool = False
-) -> str:
+) -> DataFrame:
     """Write events partitionBy(event_type) into a query-private
-    scratch dir and return its path. Each caller gets its OWN
+    scratch dir and read it back with the written schema (an empty
+    write leaves no part file to infer one from). Each caller gets its OWN
     directory: a shared one would let a later query's overwrite delete
     the part files an earlier query's still-lazy DataFrame already
     listed (build-both-then-execute callers would crash on collect).
@@ -735,11 +740,11 @@ def _events_partitioned(
     outlives testdata changes."""
     tag = _sf_tag(sf_dir)
     path = scratch_dir(f"{name}-{tag}", fresh=False)
-    if memo and path in _EVENTS_PARTITIONED_WRITTEN:
-        return path
-    write_partitioned(load(spark, sf_dir, "events"), path, "event_type")
-    _EVENTS_PARTITIONED_WRITTEN.add(path)
-    return path
+    events = load(spark, sf_dir, "events")
+    if not (memo and path in _EVENTS_PARTITIONED_WRITTEN):
+        write_partitioned(events, path, "event_type")
+        _EVENTS_PARTITIONED_WRITTEN.add(path)
+    return spark.read.schema(events.schema).parquet(path)
 
 
 @query(
@@ -761,8 +766,7 @@ def snk_partitioned_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     between scanning two event types and scanning the firehose. The
     oracle reads the ORIGINAL table, so the write→prune→read cycle is
     value-verified end to end."""
-    path = _events_partitioned(spark, sf_dir, "events-pruned-sink")
-    back = spark.read.parquet(path).filter(
+    back = _events_partitioned(spark, sf_dir, "events-pruned-sink").filter(
         F.col("event_type").isin("purchase", "click")
     )
     return back.groupBy("event_type").agg(
@@ -793,8 +797,7 @@ def join_dpp_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters — the fact never learns the surviving keys until the dim
     filter runs, yet still skips the other partitions' directories
     entirely. Plan pinned in tests/test_plan_shapes.py."""
-    path = _events_partitioned(spark, sf_dir, "events-dpp-fact", memo=True)
-    fact = spark.read.parquet(path)
+    fact = _events_partitioned(spark, sf_dir, "events-dpp-fact", memo=True)
     dim = spark.createDataFrame(
         [
             ("purchase", "conversion"),

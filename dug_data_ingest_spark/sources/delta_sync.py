@@ -576,9 +576,14 @@ def delta_sync_write(
                 )
         # else: every current key uploads (e.g. the initial publish
         # into an empty store) — the membership filter would pass all
-        # rows, so skip evaluating it
+        # rows, so skip evaluating it.
+        # The write's width is explicit, min(changed keys, shuffle
+        # partitions): a width-less repartition lets AQE coalesce it by
+        # bytes, so a small publish wrote every key dir from one task,
+        # while this write costs per file, not per byte.
+        width = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         (
-            staged.repartition(F.col(key_col))
+            staged.repartition(min(len(to_write), width), F.col(key_col))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(key_col)

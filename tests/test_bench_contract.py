@@ -68,3 +68,42 @@ def test_no_unflagged_contaminated_entry_in_history():
         and not e.get("noisy_host")
     ]
     assert bad == [], f"unflagged contaminated entries: {bad}"
+
+
+def _run(sf=0.1, cpus=4, total=1.0, calib=1.0):
+    q = {f"q{i}": total / 10 for i in range(10)}
+    line = {"sf": sf, "queries": q, "calib_spark_sec": calib}
+    if cpus is not None:
+        line["cpus"] = cpus
+    return line
+
+
+def test_history_comparison_pairs_only_equal_core_counts():
+    from bench import best_prior
+
+    timings = {f"q{i}": 0.5 for i in range(10)}  # a 5.0 s run
+    prior = [
+        _run(cpus=None, total=0.5),  # legacy line: core count unknown
+        _run(cpus=32, total=1.0),
+        _run(cpus=4, total=2.5),
+        _run(sf=0.01, cpus=4, total=0.1),
+    ]
+    adj, n_shared, prior_total, raw = best_prior(prior, timings, 0.1, 4, 1.0)
+    assert (n_shared, prior_total, raw) == (10, 2.5, 2.0)
+    assert best_prior(prior, timings, 0.1, 8, 1.0) is None
+    assert best_prior(prior[:1], timings, 0.1, 4, 1.0) is None
+
+
+def test_history_tags_stay_off_stdout():
+    import inspect
+
+    import bench
+
+    tags = bench.history_tags(4)
+    assert tags["cpus"] == 4
+    assert tags["git_sha"] is None or len(tags["git_sha"]) == 40
+    # the one stdout JSON line is printed from `result` before the
+    # tags are merged into the history line only
+    src = inspect.getsource(bench.main)
+    assert src.index("print(json.dumps(result))") < src.index("history_tags(")
+    assert "result.update(history_tags" not in src

@@ -339,6 +339,41 @@ def test_one_file_per_partition_dir(spark):
     assert len(files) == n_keys, (len(files), n_keys)
 
 
+def _last_stage_tasks(sc, group: str) -> int:
+    """Task count of the last stage the group's last job ran."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    last_job = store.job(max(sc.statusTracker().getJobIdsForGroup(group)))
+    ids = last_job.stageIds()
+    return store.lastStageAttempt(
+        max(ids.apply(i) for i in range(ids.length()))
+    ).numTasks()
+
+
+@pytest.mark.parametrize("n_keys", [3, 40])
+def test_publish_write_runs_one_task_per_key_up_to_shuffle_width(spark, n_keys):
+    # the changed-partition write is cost-per-file: AQE must not
+    # coalesce it by bytes into one task; each key dir still gets
+    # exactly one part file
+    sc = spark.sparkContext
+    path = scratch_dir(f"test-delta-sync-width-{n_keys}")
+    keys = [r.k for r in _orders(spark).select("k").distinct().orderBy("k").limit(n_keys).collect()]
+    assert len(keys) == n_keys
+    df = _orders(spark).filter(F.col("k").isin(keys)).repartition(16)
+    group = f"test-delta-sync-width-{n_keys}"
+    sc.setJobGroup(group, "delta-sync publish width")
+    try:
+        stats, _ = delta_sync_write(df, path, "k", CONTENT)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert stats["upload"] == n_keys
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert _last_stage_tasks(sc, group) == min(n_keys, width)
+    dirs = {os.path.dirname(f) for f in _file_states(path)}
+    assert len(dirs) == n_keys and len(_file_states(path)) == n_keys
+
+
 def test_manifest_is_order_insensitive(spark):
     df = _orders(spark)
     m1 = build_manifest(df, "k", CONTENT)
