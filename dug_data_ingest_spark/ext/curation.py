@@ -14,6 +14,8 @@ packing group.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -23,6 +25,7 @@ from dug_data_ingest_spark.ext.dedup import (
     doc_shingles,
     paragraph_dedup,
 )
+from dug_data_ingest_spark.functions.constants import fold_or_broadcast
 from dug_data_ingest_spark.functions.text import n_words, normalized_words
 
 
@@ -565,24 +568,59 @@ def vocab_topk(
 # Spark shape at 100 TB: features are row-local md5-bucket ids (no
 # vocabulary, no fitting state beyond B counts), each distribution is
 # ONE map-side-combined groupBy bounded by B buckets at any corpus
-# size, the B log-ratios ride a 1-row broadcast join, and scoring is
-# a pure projection (F.aggregate over the doc's bucket array). The
-# raw corpus is scanned twice (distribution + scoring); at real scale
-# fit the raw distribution on a hash_sample() slice instead — the
-# estimator only needs proportions, and the docstring of
-# dsir_log_weights spells the contract.
+# size, the B log-ratios fold into the plan (fold_or_broadcast: a
+# constant-folded literal up to _LITERAL_MAX_ELEMS values, a 1-row
+# broadcast above it), and scoring is a pure projection (F.aggregate
+# over the doc's bucket array). The raw corpus is scanned twice
+# (distribution + scoring); at real scale fit the raw distribution on
+# a hash_sample() slice instead — the estimator only needs
+# proportions, and the docstring of dsir_log_weights spells the
+# contract.
 # ---------------------------------------------------------------------------
 
 
-def _double_array_lit(values: list) -> Column:
-    """A list of Python floats as ONE constant-folded Spark array
-    literal (parsed from SQL in a single JVM call — 4096 F.lit()
-    elements would cost 4096+ py4j round trips, and a broadcast-row
-    crossJoin would copy the array onto every row). The ``D`` suffix
-    forces DoubleType (a bare decimal literal parses as DECIMAL);
-    ``repr`` emits the shortest exact round-trip decimal, which
-    ``Double.parseDouble`` maps back to the identical bits."""
-    return F.expr("array(" + ",".join(repr(v) + "D" for v in values) + ")")
+def _log_ratios(
+    num: DataFrame,
+    num_ids: Column,
+    den: DataFrame,
+    den_ids: Column,
+    n_buckets: int,
+    alpha: float,
+) -> list[float]:
+    """The B add-``alpha`` smoothed log-ratios ``ln p_num[b] -
+    ln p_den[b]`` of two hashed-n-gram bucket distributions (each
+    side's ``*_ids`` is its doc's bucket-id array), fitted in ONE job:
+    both sides explode, tag and count in a single (bucket, side)
+    groupBy whose collect is bounded by 2 * n_buckets rows, never by
+    corpus size. Smoothing needs a finite alpha > 0: at 0 an empty
+    bucket's log-probability is log(0), at inf every ratio is NaN."""
+    if not (math.isfinite(alpha) and alpha > 0):
+        raise ValueError(f"alpha must be a finite number > 0, got {alpha!r}")
+    rows = (
+        num.select(F.explode(num_ids).alias("bucket"), F.lit(0).alias("side"))
+        .unionAll(
+            den.select(F.explode(den_ids).alias("bucket"), F.lit(1).alias("side"))
+        )
+        .groupBy("bucket", "side")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .collect()
+    )
+    counts = [[0] * n_buckets, [0] * n_buckets]
+    for r in rows:
+        counts[r["side"]][r["bucket"]] = r["cnt"]
+    lp = []
+    for side in counts:
+        total = sum(side) + alpha * n_buckets
+        lp.append([math.log((c + alpha) / total) for c in side])
+    return [lp[0][i] - lp[1][i] for i in range(n_buckets)]
+
+
+def _ratio_sum(ids: Column, ratios: Column) -> Column:
+    """Left-to-right sum of ``ratios[i]`` over the doc's bucket ids —
+    the row-local scoring fold of DSIR and the NB classifier."""
+    return F.aggregate(
+        ids, F.lit(0.0), lambda acc, i: acc + F.element_at(ratios, i + 1)
+    )
 
 
 def hashed_ngram_ids(
@@ -653,8 +691,10 @@ def dsir_log_weights(
     The two bucket distributions are collected driver-side — bounded
     by ``n_buckets`` (default 4096) rows regardless of corpus size,
     the same boundedness contract as stratified_exact_k's rollup —
-    and the B log-ratios are shipped back as ONE broadcast row, so
-    scoring is a row-local array fold: the raw corpus never shuffles.
+    and the B log-ratios fold into the plan through
+    ``fold_or_broadcast`` (a constant-folded literal at the default
+    4096 buckets, a 1-row broadcast above its cap), so scoring is a
+    row-local array fold: the raw corpus never shuffles.
     At 100 TB fit the raw side on ``hash_sample(raw, pct)`` —
     proportions are all the estimator uses — and score the full
     corpus.
@@ -674,8 +714,6 @@ def dsir_log_weights(
     memory/disk for the repeated tokenize; at 100 TB, fit on a
     ``hash_sample`` slice per the contract above.
     """
-    import math
-
     ids = hashed_ngram_ids(normalized_words(F.col(text_col)), n_buckets)
     ids_col = "__dsir_ids"
     while ids_col in raw.columns:
@@ -683,49 +721,13 @@ def dsir_log_weights(
     # lazy: the fit job below is the first action and materializes the
     # snapshot in-line (one fewer blocking construction job)
     raw_ids = raw.withColumn(ids_col, ids).localCheckpoint(eager=False)
-
-    # one fit job for both sides: explode the (checkpointed) raw ids
-    # and the target's inline ids, tag, and count (bucket, side) groups
-    dist_rows = (
-        raw_ids.select(
-            F.explode(ids_col).alias("bucket"), F.lit(0).alias("side")
-        )
-        .unionAll(
-            target.select(
-                F.explode(ids).alias("bucket"), F.lit(1).alias("side")
-            )
-        )
-        .groupBy("bucket", "side")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()  # bounded by 2 * n_buckets rows, never corpus size
-    )
-
-    def _logprobs(side: int) -> list[float]:
-        counts = [0] * n_buckets
-        for r in dist_rows:
-            if r["side"] == side:
-                counts[r["bucket"]] = r["cnt"]
-        total = sum(counts) + alpha * n_buckets
-        return [math.log((c + alpha) / total) for c in counts]
-
-    lp_t, lp_r = _logprobs(1), _logprobs(0)
-    ratios = [lp_t[i] - lp_r[i] for i in range(n_buckets)]
-    # the B log-ratios ride as a CONSTANT-FOLDED literal array — the
-    # old 1-row broadcast crossJoin attached (copied) the 32 KB array
-    # onto every corpus row before the fold could index it, and that
-    # copy dominated the scoring stage (r13 phase profile: 2.8 s of a
-    # 3.4 s execute). repr() round-trips every IEEE double exactly, so
-    # the scored values are bit-identical to the broadcast form.
-    ratios_lit = _double_array_lit(ratios)
-    scored = raw_ids.withColumn(
-        weight_col,
-        F.aggregate(
-            F.col(ids_col),
-            F.lit(0.0),
-            lambda acc, i: acc + F.element_at(ratios_lit, i + 1),
-        ),
+    ratios = _log_ratios(target, ids, raw_ids, F.col(ids_col), n_buckets, alpha)
+    return fold_or_broadcast(
+        raw_ids,
+        ratios,
+        T.ArrayType(T.DoubleType()),
+        lambda df, r: df.withColumn(weight_col, _ratio_sum(F.col(ids_col), r)),
     ).drop(ids_col)
-    return scored
 
 
 def dsir_resample(
@@ -801,19 +803,17 @@ def nb_quality_log_odds(
     Scale shape (the dsir_log_weights contract): each class
     distribution is ONE map-side-combined groupBy bounded by
     ``n_buckets`` rows at any corpus size, collected driver-side; the
-    B log-ratios + the scalar prior ship back as ONE broadcast row;
-    scoring is a row-local array fold — the scored corpus never
-    shuffles. At 100 TB fit the class distributions on hash_sample
-    slices (proportions are all the estimator uses) and score the
-    full corpus.
+    B log-ratios fold into the plan through ``fold_or_broadcast`` and
+    the scalar prior as a literal; scoring is a row-local array fold —
+    the scored corpus never shuffles. At 100 TB fit the class
+    distributions on hash_sample slices (proportions are all the
+    estimator uses) and score the full corpus.
 
     Deterministic: md5 buckets, closed-form ratios, fixed
     left-to-right fold with the prior added LAST (prior + foldsum —
     the oracle replays the same IEEE op order); model-pinned against
     a pure-Python walk in tests/test_nb_classifier.py.
     """
-    import math
-
     # one job for both class sizes (r13: two .count() actions each
     # re-ran the classes' shared upstream plan)
     size_rows = (
@@ -831,47 +831,16 @@ def nb_quality_log_odds(
             f"(got pos={n_p}, neg={n_n}) — an empty class makes the "
             "prior infinite"
         )
-
-    # one fit job for both class distributions (r13: was two
-    # sequential bucket_distribution jobs, each re-tokenizing)
-    ids_fit = hashed_ngram_ids(normalized_words(F.col(text_col)), n_buckets)
-    dist_rows = (
-        pos.select(F.explode(ids_fit).alias("bucket"), F.lit(0).alias("side"))
-        .unionAll(
-            neg.select(
-                F.explode(ids_fit).alias("bucket"), F.lit(1).alias("side")
-            )
-        )
-        .groupBy("bucket", "side")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()  # bounded by 2 * n_buckets rows, never corpus size
-    )
-
-    def _logprobs(side: int) -> list[float]:
-        counts = [0] * n_buckets
-        for r in dist_rows:
-            if r["side"] == side:
-                counts[r["bucket"]] = r["cnt"]
-        total = sum(counts) + alpha * n_buckets
-        return [math.log((c + alpha) / total) for c in counts]
-
-    lp_p, lp_n = _logprobs(0), _logprobs(1)
-    ratios = [lp_p[i] - lp_n[i] for i in range(n_buckets)]
-    prior = math.log(n_p / n_n)
     if out_col in docs.columns:
         raise ValueError(f"docs already has a {out_col!r} column")
-    # constant-folded literal ratios — see dsir_log_weights (the
-    # broadcast-row crossJoin copied the array onto every scored row)
-    ratios_lit = _double_array_lit(ratios)
     ids = hashed_ngram_ids(normalized_words(F.col(text_col)), n_buckets)
-    return docs.withColumn(
-        out_col,
-        F.lit(prior)
-        + F.aggregate(
-            ids,
-            F.lit(0.0),
-            lambda acc, i: acc + F.element_at(ratios_lit, i + 1),
-        ),
+    ratios = _log_ratios(pos, ids, neg, ids, n_buckets, alpha)
+    prior = math.log(n_p / n_n)
+    return fold_or_broadcast(
+        docs,
+        ratios,
+        T.ArrayType(T.DoubleType()),
+        lambda df, r: df.withColumn(out_col, F.lit(prior) + _ratio_sum(ids, r)),
     )
 
 

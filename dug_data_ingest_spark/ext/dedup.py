@@ -25,7 +25,9 @@ import threading
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from dug_data_ingest_spark.functions.constants import fold_or_broadcast, sql_literal
 from dug_data_ingest_spark.functions.text import normalized_words, shingles_of
 
 log = logging.getLogger(__name__)
@@ -1411,7 +1413,9 @@ def _bit_masks() -> Column:
     1<<i, with bit 63 as the BIGINT sign bit). Spark's shiftleft
     wrapper only takes a literal shift, so variable shifts become an
     element_at into this constant — codegen folds it to a lookup."""
-    return F.array(*[F.lit(_signed64(1 << b)).cast("bigint") for b in range(64)])
+    return F.expr(
+        sql_literal([_signed64(1 << b) for b in range(64)], T.ArrayType(T.LongType()))
+    )
 
 
 def _bloom_positions(key: Column, m_bits: int, k_hashes: int) -> Column:
@@ -1487,14 +1491,6 @@ def bloom_build(
     return words
 
 
-# Bitmaps up to this many 64-bit words (4 Mbit, 512 KB) fold into the
-# plan as an array literal; bigger ones ship as a 1-row broadcast —
-# see bloom_probe. 64k words keeps the SQL text under ~1.3 MB and the
-# parse/analyze cost trivial while covering every benched path
-# (dedup-bloom-probe uses 1<<14 bits = 256 words).
-_BLOOM_LITERAL_MAX_WORDS = 1 << 16
-
-
 def bloom_probe(
     batch: DataFrame,
     words: list[int],
@@ -1507,19 +1503,19 @@ def bloom_probe(
     filter's false-positive rate), False when definitely unseen, NULL
     for NULL keys.
 
-    Below ``_BLOOM_LITERAL_MAX_WORDS`` (64k words = 4 Mbit = 512 KB)
-    the bitmap rides as a CONSTANT-FOLDED bigint array literal inside
-    the probe lambda (the DSIR literal-ratio idiom, r13 — one static
-    ArrayData in the plan, referenced per lookup) instead of a 1-row
-    broadcast crossJoin, which physically copied the ``m_bits/64``-word
-    array into EVERY output row of the join. Above the threshold the
-    literal stops being free — the SQL text alone is many MB, parsed
-    and analyzed per plan, and it grows with the filter — so big
-    bitmaps (e.g. the library-default ``m_bits=1<<23`` of
-    bloom_dedup_flags/bloom_prefilter_exact) keep the broadcast form:
-    one array shipped once per executor, still zero shuffles of the
-    batch. Either way the probe is a pure row-local lookup — no join
-    against history, whatever the history size was.
+    The bitmap rides the plan through ``fold_or_broadcast``: up to
+    ``_LITERAL_MAX_ELEMS`` words (64k words = 4 Mbit = 512 KB) as a
+    CONSTANT-FOLDED bigint array literal inside the probe lambda (one
+    static ArrayData in the plan, referenced per lookup), since a
+    1-row broadcast crossJoin physically copies the ``m_bits/64``-word
+    array into EVERY output row of the join. Above the cap the literal
+    stops being free — the SQL text alone is many MB, parsed and
+    analyzed per plan — so big bitmaps (e.g. the library-default
+    ``m_bits=1<<23`` of bloom_dedup_flags/bloom_prefilter_exact) take
+    the broadcast form: one array shipped once per executor, still
+    zero shuffles of the batch. Either way the probe is a pure
+    row-local lookup — no join against history, whatever the history
+    size was.
     """
     m_bits = len(words) * 64
     if not words:
@@ -1546,31 +1542,11 @@ def bloom_probe(
             ),
         )
 
-    if len(words) <= _BLOOM_LITERAL_MAX_WORDS:
-        # bigint literals (L suffix), parsed in ONE JVM call; int
-        # values from bloom_build are exact in 64-bit, so the
-        # round-trip is exact
-        words_lit = F.expr("array(" + ",".join(f"{w}L" for w in words) + ")")
-        return batch.withColumn(flag_col, F.when(key.isNotNull(), hit(words_lit)))
-
-    from pyspark.sql import types as T
-
-    # suffix-until-free staging guard (the gate_documents convention):
-    # a batch already carrying __bloom_words must come back intact,
-    # not collide ambiguously with the broadcast row's column
-    words_col = "__bloom_words"
-    while words_col in batch.columns:
-        words_col += "_"
-    words_row = batch.sparkSession.createDataFrame(
-        [(words,)],
-        T.StructType(
-            [T.StructField(words_col, T.ArrayType(T.LongType(), False))]
-        ),
-    )
-    return (
-        batch.crossJoin(F.broadcast(words_row))  # 1-row scalar broadcast
-        .withColumn(flag_col, F.when(key.isNotNull(), hit(F.col(words_col))))
-        .drop(words_col)
+    return fold_or_broadcast(
+        batch,
+        words,
+        T.ArrayType(T.LongType()),
+        lambda df, w: df.withColumn(flag_col, F.when(key.isNotNull(), hit(w))),
     )
 
 

@@ -15,8 +15,12 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from dug_data_ingest_spark.functions.constants import fold_or_broadcast, sql_literal
 from dug_data_ingest_spark.functions.vectors import as_double, cosine, dot
+
+_DOUBLES = T.ArrayType(T.DoubleType())
 
 
 def _scored(
@@ -32,7 +36,7 @@ def _scored(
     oracles order by the raw cosine, so ordering by the rounded value
     could pick a different row set when a rounded tie straddles the
     LIMIT boundary."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    q = F.expr(sql_literal(query_vec, _DOUBLES))
     raw = cosine(as_double(F.col(vec_col)), q)
     return embeddings.select(
         F.col(id_col),
@@ -103,7 +107,7 @@ def hard_negatives(
     id; the rounded value is for display/oracles — see _scored's
     boundary note). NULL labels count as a different class
     (null-safe inequality), never silently dropped."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    q = F.expr(sql_literal(query_vec, _DOUBLES))
     raw = cosine(as_double(F.col(vec_col)), q)
     return (
         embeddings.filter(~F.col(label_col).eqNullSafe(F.lit(query_label)))
@@ -158,7 +162,7 @@ def ivf_topk(
     a broadcast; the corpus scan prunes to the probed cells (partition
     pruning when the table is written partitionBy(label)).
     """
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    q = F.expr(sql_literal(query_vec, _DOUBLES))
     cents = label_centroids(embeddings, label_col, vec_col)
     best_cells = (
         cents.select(
@@ -287,7 +291,7 @@ def rp_lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
     )
     bit = F.lit(0)
     for j, plane in enumerate(planes):
-        p = F.array(*[F.lit(x) for x in plane])
+        p = F.expr(sql_literal(plane, _DOUBLES))
         bit = bit + F.when(dot(guarded, p) > 0, F.lit(2**j)).otherwise(F.lit(0))
     return bit
 
@@ -366,7 +370,7 @@ def lsh_banded_pairs(
     n_bands = n_planes // band_size
     v = _dim_checked(as_double(F.col(vec_col)), dim, "lsh_banded_pairs")
     bits = [
-        F.when(dot(v, F.array(*[F.lit(x) for x in p])) > 0, F.lit(1)).otherwise(
+        F.when(dot(v, F.expr(sql_literal(p, _DOUBLES))) > 0, F.lit(1)).otherwise(
             F.lit(0)
         )
         for p in planes
@@ -577,7 +581,9 @@ def semantic_dedup(
 # assign shuffle per iteration for ALL subspaces together, corpus
 # scanned never shuffled; codebooks are m*k rows and always
 # broadcast; encoded scoring is a row-local expression over a
-# literal distance table, so top-k plans as TakeOrderedAndProject.
+# distance table folded into the plan (fold_or_broadcast: a literal
+# up to _LITERAL_MAX_ELEMS values, a 1-row broadcast above), so top-k
+# plans as TakeOrderedAndProject.
 # Exact arithmetic is pinned to a numpy reference model in
 # tests/test_pq_properties.py (float sums differ across engines in
 # low-order bits, so this stays library surface rather than a
@@ -622,13 +628,15 @@ def pq_train(
     no RNG). EAGER since r14: each round is ONE map-side-combined
     (subspace, cluster) groupBy whose d per-position means land in one
     bounded collect (m*k rows at any corpus size), and re-assignment
-    folds the collected centroids into a row-local literal argmin —
-    no broadcast join, no per-iteration (id, subspace) argmin shuffle,
-    no per-round corpus exchange at all (the corpus is scanned once
-    per round, never shuffled). The returned codebook is a
-    local-relation DataFrame, so a caller's collect()/broadcast of it
-    is free and every consumer reads the ONE learned snapshot (the
-    avg partial-merge-order caveat cannot produce divergent copies)."""
+    folds the collected centroids into a row-local argmin
+    (fold_or_broadcast: a literal while m*k*(d+1) values fit the cap,
+    a 1-row broadcast above it) — no broadcast join, no per-iteration
+    (id, subspace) argmin shuffle, no per-round corpus exchange at
+    all (the corpus is scanned once per round, never shuffled). The
+    returned codebook is a local-relation DataFrame, so a caller's
+    collect()/broadcast of it is free and every consumer reads the ONE
+    learned snapshot (the avg partial-merge-order caveat cannot
+    produce divergent copies)."""
     if n_iters < 1:
         raise ValueError(
             f"pq_train: n_iters must be >= 1 (got {n_iters}); no "
@@ -643,10 +651,19 @@ def pq_train(
                 "cluster", (F.col(id_col) % k).cast("int")
             )
         else:
-            assigned = sub.withColumn(
-                "cluster",
-                _pq_nearest_cluster(
-                    _pq_books_by_subspace(rows, m, d, "pq_train"), d
+            # element_at on the folded all-subspace codebook selects
+            # the row's candidate list: the re-assignment is row-local,
+            # no broadcast join, no corpus-wide argmin groupBy
+            assigned = fold_or_broadcast(
+                sub,
+                _pq_books_by_subspace(rows, m, d, "pq_train"),
+                _PQ_BOOKS,
+                lambda df, books: df.withColumn(
+                    "cluster",
+                    _pq_argmin(
+                        F.element_at(books, F.col("subspace") + 1),
+                        F.col("subvec"),
+                    ),
                 ),
             )
         means = assigned.groupBy("subspace", "cluster").agg(
@@ -663,38 +680,43 @@ def pq_train(
     return _pq_books_df(embeddings.sparkSession, rows)
 
 
+# a collected codebook row, and the whole codebook as one constant:
+# entry s is subspace s's (cluster, centroid) entries sorted by cluster
+_PQ_ROW = (
+    T.StructType()
+    .add("subspace", T.IntegerType())
+    .add("cluster", T.IntegerType())
+    .add("centroid", _DOUBLES)
+)
+_PQ_BOOKS = T.ArrayType(T.ArrayType(T.StructType(_PQ_ROW.fields[1:])))
+
+
 def _pq_books_df(spark: SparkSession, rows: list) -> DataFrame:
     """The collected codebook as a VALUES inline table — a true
     LocalRelation, unlike createDataFrame(rows) which parallelizes an
     RDD (collect() on it launches a real Spark job; measured ~0.5 s of
     the query's construction). Collecting, broadcasting, or folding a
     LocalRelation is driver-local and free. Doubles round-trip
-    bit-exactly via _sql_double."""
+    bit-exactly via sql_literal."""
     if not rows:
-        return spark.createDataFrame(
-            [], "subspace int, cluster int, centroid array<double>"
-        )
+        return spark.createDataFrame([], _PQ_ROW)
     vals = ", ".join(
-        "({}, {}, array({}))".format(
-            int(r.subspace),
-            int(r.cluster),
-            ", ".join(_sql_double(float(v)) for v in r.centroid),
+        "({}, {}, {})".format(
+            *(sql_literal(v, f.dataType) for v, f in zip(r, _PQ_ROW.fields))
         )
         for r in rows
     )
     return spark.sql(
-        "SELECT CAST(subspace AS INT) AS subspace, "
-        "CAST(cluster AS INT) AS cluster, centroid "
-        f"FROM VALUES {vals} AS t(subspace, cluster, centroid)"
+        f"SELECT * FROM VALUES {vals} AS t(subspace, cluster, centroid)"
     )
 
 
 def _pq_books_by_subspace(
     codebook_rows: list, m: int, d: int, caller: str
-) -> dict[int, list[tuple[int, list[float]]]]:
-    """{subspace: [(cluster, centroid)] sorted by cluster} from the
-    collected codebook, with the pq_adc_topk validation posture:
-    ragged sub-centroids and missing subspaces fail loudly instead of
+) -> list[list[tuple[int, list[float]]]]:
+    """The collected codebook as a ``_PQ_BOOKS`` value: entry s is
+    subspace s's [(cluster, centroid)] sorted by cluster. Ragged
+    sub-centroids and missing subspaces fail loudly instead of
     silently truncating distances or dropping codes."""
     by_s: dict[int, list[tuple[int, list[float]]]] = {}
     for r in codebook_rows:
@@ -712,118 +734,72 @@ def _pq_books_by_subspace(
             f"{caller}: codebook covers subspaces {sorted(by_s)}, "
             f"expected 0..{m - 1} — codebook and m disagree"
         )
-    return {s: sorted(entries) for s, entries in by_s.items()}
+    return [sorted(by_s[s]) for s in range(m)]
 
 
-def _sql_double(v: float) -> str:
-    """Bit-exact SQL double literal: repr() is the shortest string
-    that round-trips the IEEE double, and Java's parseDouble is
-    correctly rounded, so the JVM re-materializes the identical bits."""
-    import math
-
-    if math.isnan(v):
-        return "CAST('NaN' AS DOUBLE)"
-    if math.isinf(v):
-        return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
-    return f"{v!r}D"
-
-
-def _pq_cents_sql(entries: list[tuple[int, list[float]]]) -> str:
-    """One subspace's [(cluster, centroid)] as an array-of-structs SQL
-    literal. Two measured dead ends this shape avoids: (a) a ~400-node
-    arithmetic expansion of the argmin blew janino's generated-method
-    limits and fell back to interpreted projection (10x slower than
-    the r13 broadcast join it replaced); (b) composing the table from
-    nested F.lit/F.struct/F.array Columns cost ~2.3 s of driver-side
-    py4j round trips PER expression build. One F.expr parse is
-    milliseconds, every child is foldable, and ConstantFolding
-    collapses the table into a single Literal node; the higher-order
-    zip_with/aggregate argmin below keeps the expression TREE tiny
-    while the per-row work is the same d multiplies per candidate."""
-    return "array({})".format(
-        ", ".join(
-            "named_struct('cluster', CAST({} AS INT), 'centroid', array({}))".format(
-                int(c), ", ".join(_sql_double(float(v)) for v in cent)
-            )
-            for c, cent in entries
+def _pq_argmin(cands: Column, subvec: Column) -> Column:
+    """Cluster id of the entry of ``cands`` (array<struct<cluster,
+    centroid>>) nearest ``subvec``: array_min over (d2, cluster)
+    structs — the lowest-cluster tie-break via lexicographic struct
+    order, the same left-to-right (x-y)^2 fold the reference model
+    replays. Higher-order functions keep the expression TREE tiny (an
+    unrolled ~400-node arithmetic argmin blew janino's generated-method
+    limits and fell back to interpreted projection) while the per-row
+    work is d multiplies per candidate."""
+    return F.array_min(
+        F.transform(
+            cands,
+            lambda e: F.named_struct(
+                F.lit("d2"),
+                F.aggregate(
+                    F.zip_with(
+                        subvec, e["centroid"], lambda x, y: (x - y) * (x - y)
+                    ),
+                    F.lit(0.0),
+                    lambda acc, x: acc + x,
+                ),
+                F.lit("cluster"),
+                e["cluster"],
+            ),
         )
-    )
+    )["cluster"]
 
 
-def _pq_argmin_sql(cands_sql: str, subvec_sql: str) -> str:
-    """Nearest entry of ``cands_sql`` (array<struct<cluster,centroid>>)
-    to ``subvec_sql``: array_min over (d2, cluster) structs — the
-    lowest-cluster tie-break via lexicographic struct order, the same
-    left-to-right (x-y)^2 fold the reference model replays."""
-    return (
-        "array_min(transform({cands}, e -> named_struct("
-        "'d2', aggregate(zip_with({sv}, e.centroid, "
-        "(x, y) -> (x - y) * (x - y)), 0.0D, (acc, x) -> acc + x), "
-        "'cluster', e.cluster))).cluster"
-    ).format(cands=cands_sql, sv=subvec_sql)
-
-
-def _pq_nearest_cluster(
-    by_s: dict[int, list[tuple[int, list[float]]]], d: int
-) -> Column:
-    """Row-local nearest-codebook-entry id for the exploded
-    (subspace, subvec) frame: element_at on a constant-folded
-    per-subspace table literal selects the candidate list, the
-    argmin picks the entry. Replaces a broadcast join + corpus-wide
-    groupBy argmin with a constant-folded expression: zero exchanges
-    (the r13 DSIR literal-fold idiom applied to the learned
-    centroids)."""
-    tbl = "array({})".format(
-        ", ".join(_pq_cents_sql(by_s[s]) for s in sorted(by_s))
-    )
-    return F.expr(
-        _pq_argmin_sql(f"element_at({tbl}, subspace + 1)", "subvec")
-    )
-
-
-def _pq_codes_expr(
-    codebook_rows: list,
-    m: int,
-    dim: int,
-    vec_col: str,
-    caller: str = "pq_encode",
-) -> Column:
-    """``codes[m]`` as ONE row-local expression over the raw vector
-    column: per subspace, the literal-table argmin on the contiguous
-    d-dim slice. No explode, no join, no shuffle — encoding a 100-TB
-    corpus is a pure projection over one scan. Built as a single
-    parsed SQL string (the _pq_cents_sql rationale); the dim guard is
-    the SQL form of _dim_checked and the element casts the SQL form
-    of as_double, so the checked/cast values are bit-identical."""
+def _pq_encoded(
+    df: DataFrame, codebook_rows: list, m: int, dim: int, vec_col: str, keep: list
+) -> DataFrame:
+    """``df.select(*keep, codes[m])``: per subspace, the argmin of the
+    contiguous d-dim slice of ``vec_col`` against that subspace's
+    codebook entries, all over ONE folded codebook constant. No
+    explode, no join, no shuffle — encoding a 100-TB corpus is a pure
+    projection over one scan. A codebook that covers no subspace at
+    all (trained on an empty corpus) encodes to zero rows."""
+    if not codebook_rows:
+        return df.select(
+            *keep, F.lit(None).cast("array<int>").alias("codes")
+        ).filter(F.lit(False))
     if dim % m:
         raise ValueError(
-            f"{caller}: m={m} must divide the vector dimension {dim}; "
+            f"pq_encode: m={m} must divide the vector dimension {dim}; "
             "ragged subspaces would silently misalign codes against "
             "codebooks"
         )
     d = dim // m
-    by_s = _pq_books_by_subspace(codebook_rows, m, d, caller)
-    vq = vec_col.replace("`", "``")
-    checked = (
-        f"CASE WHEN size(`{vq}`) = {dim} THEN `{vq}` "
-        f"ELSE raise_error(printf('{caller}: embedding has %s dims, "
-        f"expected {dim}; pass dim=<real width> to the entry point', "
-        f"size(`{vq}`))) END"
-    )
-    subvecs = [
-        (
-            f"transform(slice({checked}, {s * d + 1}, {d}), "
-            "x -> CAST(x AS DOUBLE))"
-        )
-        for s in range(m)
-    ]
-    return F.expr(
-        "array({})".format(
-            ", ".join(
-                _pq_argmin_sql(_pq_cents_sql(by_s[s]), subvecs[s])
-                for s in range(m)
-            )
-        )
+    vec = _dim_checked(F.col(vec_col), dim, "pq_encode")
+    subvecs = [as_double(F.slice(vec, s * d + 1, d)) for s in range(m)]
+    return fold_or_broadcast(
+        df,
+        _pq_books_by_subspace(codebook_rows, m, d, "pq_encode"),
+        _PQ_BOOKS,
+        lambda f, books: f.select(
+            *keep,
+            F.array(
+                *[
+                    _pq_argmin(F.element_at(books, s + 1), subvecs[s])
+                    for s in range(m)
+                ]
+            ).alias("codes"),
+        ),
     )
 
 
@@ -839,28 +815,45 @@ def pq_encode(
     codebook ids, ordered by subspace. At rest this is the compressed
     index a 100-TB corpus stores instead of raw floats.
 
-    Since r14 the collected codebook folds into a literal argmin
-    (``_pq_codes_expr``), so encoding is a single row-local projection
-    — the r13 shape (explode to (id, subspace, subvec), broadcast
-    join, TWO corpus-wide groupBys) shuffled the exploded corpus
-    twice per encode. The collect is m*k rows, bounded by
-    construction (and free when ``codebooks`` is pq_train's
-    local-relation output). A codebook that covers no subspace at all
-    (trained on an empty corpus) still encodes to zero rows, matching
-    the old inner-join behavior; a PARTIALLY covering codebook now
-    fails loudly here instead of emitting short codes arrays that
-    _adc_score would reject later."""
-    rows = codebooks.collect()
-    if not rows:
-        return embeddings.select(
-            F.col(id_col), F.lit(None).cast("array<int>").alias("codes")
-        ).filter(F.lit(False))
-    codes = _pq_codes_expr(rows, m, dim, vec_col, "pq_encode")
-    return embeddings.select(F.col(id_col), codes.alias("codes"))
+    Since r14 the collected codebook folds into a row-local argmin
+    (``_pq_encoded``), so encoding is a single projection — the r13
+    shape (explode to (id, subspace, subvec), broadcast join, TWO
+    corpus-wide groupBys) shuffled the exploded corpus twice per
+    encode. The collect is m*k rows, bounded by construction (and
+    free when ``codebooks`` is pq_train's local-relation output). A
+    codebook that covers no subspace at all (trained on an empty
+    corpus) still encodes to zero rows, matching the old inner-join
+    behavior; a PARTIALLY covering codebook fails loudly here instead
+    of emitting short codes arrays that _adc_score would reject
+    later."""
+    return _pq_encoded(
+        embeddings, codebooks.collect(), m, dim, vec_col, [F.col(id_col)]
+    )
+
+
+def _adc_table(
+    books: list[list[tuple[int, list[float]]]], query: list
+) -> list[list[float]]:
+    """The (m x n_clusters) squared-L2 table from each d-dim slice of
+    ``query`` to every sub-centroid of ``books`` (a
+    ``_pq_books_by_subspace`` value) — the one table builder behind
+    pq_adc_topk and ivf_pq_topk. Lloyd can leave a cluster id empty;
+    it scores +inf so a stale code pointing at it can never win
+    silently."""
+    d = len(books[0][0][1])
+    n_clusters = 1 + max(c for entries in books for c, _ in entries)
+    table = []
+    for s, entries in enumerate(books):
+        q_sub = query[s * d : (s + 1) * d]
+        row = [float("inf")] * n_clusters
+        for c, cent in entries:
+            row[c] = sum((float(q) - x) ** 2 for q, x in zip(q_sub, cent))
+        table.append(row)
+    return table
 
 
 def _adc_score(table: Column, m: int, caller: str) -> Column:
-    """Row-local ADC score of the ``codes`` column against a literal
+    """Row-local ADC score of the ``codes`` column against a folded
     (m x n_clusters) squared-distance table — the one scoring
     expression behind pq_adc_topk and ivf_pq_topk so a guard fix can
     never drift between them. Codes shorter than m would NULL-pad the
@@ -915,55 +908,24 @@ def pq_adc_topk(
 
     ``codebook_rows`` is the COLLECTED codebook (m*k rows — bounded by
     construction, the PQ analogue of broadcasting IVF centroids). The
-    per-(subspace, cluster) squared distance to the query folds into a
-    literal nested-array table, so scoring is a row-local expression
-    over the codes column — no join, no shuffle; ``orderBy.limit``
-    plans as TakeOrderedAndProject."""
+    per-(subspace, cluster) squared distance to the query folds into
+    the plan as one nested-array constant (``fold_or_broadcast``), so
+    scoring is a row-local expression over the codes column — no
+    join, no shuffle; ``orderBy.limit`` plans as
+    TakeOrderedAndProject."""
     dim = len(query_vec)
     if dim % m:
         raise ValueError(f"pq_adc_topk: m={m} must divide query dim {dim}")
-    d = dim // m
-    table: dict[int, dict[int, float]] = {}
-    n_clusters = 0
-    for row in codebook_rows:
-        if len(row.centroid) != d:
-            # zip() would silently truncate — half-scored distances,
-            # wrong ranking, no error (the _dim_checked posture)
-            raise ValueError(
-                f"pq_adc_topk: codebook sub-centroid has "
-                f"{len(row.centroid)} dims, expected d={d} (dim={dim}, "
-                f"m={m}) — query and codebook trained at different dims"
-            )
-        q_sub = query_vec[row.subspace * d : (row.subspace + 1) * d]
-        dist2 = sum((float(q) - float(c)) ** 2 for q, c in zip(q_sub, row.centroid))
-        table.setdefault(row.subspace, {})[row.cluster] = dist2
-        n_clusters = max(n_clusters, row.cluster + 1)
-    if sorted(table) != list(range(m)):
-        raise ValueError(
-            f"pq_adc_topk: codebook covers subspaces {sorted(table)}, "
-            f"expected 0..{m - 1} — codebook and m disagree"
-        )
-    # Lloyd can leave a cluster id empty; score it +inf so a stale
-    # code pointing at it can never win silently. One parsed SQL
-    # string, not nested F.lit/F.array: the per-Column py4j round
-    # trips dominated query CONSTRUCTION time (the _pq_cents_lit
-    # lesson), and ConstantFolding collapses it identically.
-    lit_table = F.expr(
-        "array({})".format(
-            ", ".join(
-                "array({})".format(
-                    ", ".join(
-                        _sql_double(table[s].get(c, float("inf")))
-                        for c in range(n_clusters)
-                    )
-                )
-                for s in range(m)
-            )
-        )
-    )
-    score = _adc_score(lit_table, m, "pq_adc_topk")
+    books = _pq_books_by_subspace(codebook_rows, m, dim // m, "pq_adc_topk")
     return (
-        codes.select(F.col(id_col), score.alias("adc_dist2"))
+        fold_or_broadcast(
+            codes,
+            _adc_table(books, query_vec),
+            T.ArrayType(_DOUBLES),
+            lambda df, table: df.select(
+                F.col(id_col), _adc_score(table, m, "pq_adc_topk").alias("adc_dist2")
+            ),
+        )
         .orderBy(F.col("adc_dist2").asc(), F.col(id_col).asc())
         .limit(k)
     )
@@ -1006,7 +968,7 @@ def pq_topk_reranked(
         cand = pq_adc_topk(
             codes, codebook_rows, query_vec, k=shortlist, m=m, id_col=id_col
         ).select(id_col)
-    q = F.lit([float(x) for x in query_vec]).cast("array<double>")
+    q = F.expr(sql_literal(query_vec, _DOUBLES))
     # _dim_checked: a vector shorter than the query would NULL-pad the
     # zip, NULL dist2, and rank FIRST under ascending nulls-first
     d2 = F.aggregate(
@@ -1080,23 +1042,14 @@ def ivf_pq_index(
         residuals, m=m, k=k, n_iters=n_iters, dim=dim,
         id_col=id_col, vec_col="residual",
     )
-    # codes as a row-local literal-argmin projection WITH the cell id
-    # riding along — the r13 shape joined pq_encode's output back to
-    # the residual frame by id just to re-attach ``cell`` (one whole
+    # codes as a row-local argmin projection WITH the cell id riding
+    # along — the r13 shape joined pq_encode's output back to the
+    # residual frame by id just to re-attach ``cell`` (one whole
     # exchange + a second corpus pass, removed)
     rows = books.collect()  # free: pq_train returns a local relation
-    if rows:
-        coded = residuals.select(
-            F.col(id_col),
-            "cell",
-            _pq_codes_expr(rows, m, dim, "residual", "pq_encode").alias(
-                "codes"
-            ),
-        )
-    else:
-        coded = residuals.select(
-            F.col(id_col), "cell", F.lit(None).cast("array<int>").alias("codes")
-        ).filter(F.lit(False))
+    coded = _pq_encoded(
+        residuals, rows, m, dim, "residual", [F.col(id_col), F.col("cell")]
+    )
     return cells_df.collect(), books, coded
 
 
@@ -1113,8 +1066,9 @@ def ivf_pq_topk(
     """Probe-bounded ADC top-k over the IVF-PQ index: score only the
     ``nprobe`` cells whose centroids are nearest the query, each with
     its OWN distance table built from the query's residual in that
-    cell. The per-cell tables fold into a literal when-chain keyed on
-    the row's cell id, so scoring stays a row-local expression and
+    cell. The per-cell tables fold into the plan as one constant
+    (``fold_or_broadcast``), picked by a when-chain keyed on the row's
+    cell id, so scoring stays a row-local expression and
     the cell filter prunes (1 - nprobe/n_cells) of the corpus before
     any arithmetic; top-k plans as TakeOrderedAndProject."""
     dim = len(query_vec)
@@ -1139,74 +1093,36 @@ def ivf_pq_topk(
         ),
     )
     probed = by_dist[: max(1, nprobe)]
+    books = _pq_books_by_subspace(codebook_rows, m, d, "ivf_pq_topk")
+    # the query's residual IN each probed cell gets its own table
+    tables = [
+        _adc_table(books, [float(q) - float(c) for q, c in zip(query_vec, r.centroid)])
+        for r in probed
+    ]
 
-    books: dict[int, dict[int, list[float]]] = {}
-    n_clusters = 0
-    for row in codebook_rows:
-        if len(row.centroid) != d:
-            raise ValueError(
-                f"ivf_pq_topk: codebook sub-centroid has "
-                f"{len(row.centroid)} dims, expected d={d} (dim={dim}, "
-                f"m={m}) — query and codebook trained at different dims"
-            )
-        books.setdefault(row.subspace, {})[row.cluster] = [
-            float(c) for c in row.centroid
-        ]
-        n_clusters = max(n_clusters, row.cluster + 1)
-    if sorted(books) != list(range(m)):
-        raise ValueError(
-            f"ivf_pq_topk: codebook covers subspaces {sorted(books)}, "
-            f"expected 0..{m - 1} — codebook and m disagree"
+    def score(df: DataFrame, tbls: Column) -> DataFrame:
+        # when-chain keyed on the row's cell id: built from the LAST
+        # probed cell inward so each earlier cell's branch wraps the
+        # rest (the final fallthrough is unreachable — rows outside the
+        # probed cells are filtered before scoring)
+        table = F.element_at(tbls, len(probed))
+        for i in reversed(range(len(probed) - 1)):
+            table = F.when(
+                F.col("cell") == F.lit(probed[i].cluster), F.element_at(tbls, i + 1)
+            ).otherwise(table)
+        return df.select(
+            F.col(id_col),
+            F.col("cell"),
+            _adc_score(table, m, "ivf_pq_topk").alias("adc_dist2"),
         )
 
-    def cell_table(cell_row):
-        # residual of the query IN THIS CELL → (m x n_clusters) table,
-        # emitted as one parsed SQL string (the _pq_cents_lit lesson:
-        # nested F.lit/F.array py4j round trips dominate construction)
-        resid = [
-            float(q) - float(c) for q, c in zip(query_vec, cell_row.centroid)
-        ]
-        return F.expr(
-            "array({})".format(
-                ", ".join(
-                    "array({})".format(
-                        ", ".join(
-                            _sql_double(
-                                sum(
-                                    (resid[s * d + p] - books[s][c][p]) ** 2
-                                    for p in range(d)
-                                )
-                                if c in books[s]
-                                else float("inf")
-                            )
-                            for c in range(n_clusters)
-                        )
-                    )
-                    for s in range(m)
-                )
-            )
-        )
-
-    # when-chain keyed on the row's cell id: built from the LAST
-    # probed cell inward so each earlier cell's branch wraps the rest
-    # (the final fallthrough is unreachable — rows outside the probed
-    # cells are filtered below before scoring)
-    table = None
-    for cell_row in reversed(probed):
-        branch = cell_table(cell_row)
-        table = (
-            branch
-            if table is None
-            else F.when(F.col("cell") == F.lit(cell_row.cluster), branch).otherwise(
-                table
-            )
-        )
-
-    score = _adc_score(table, m, "ivf_pq_topk")
-    probed_ids = [r.cluster for r in probed]
     return (
-        coded.filter(F.col("cell").isin(probed_ids))
-        .select(F.col(id_col), F.col("cell"), score.alias("adc_dist2"))
+        fold_or_broadcast(
+            coded.filter(F.col("cell").isin([r.cluster for r in probed])),
+            tables,
+            T.ArrayType(T.ArrayType(_DOUBLES)),
+            score,
+        )
         .orderBy(F.col("adc_dist2").asc(), F.col(id_col).asc())
         .limit(k)
     )
@@ -1255,7 +1171,7 @@ def ivf_pq_topk_reranked(
             coded, cells, codebook_rows, query_vec,
             k=shortlist, nprobe=nprobe, m=m, id_col=id_col,
         ).select(id_col)
-    q = F.lit([float(x) for x in query_vec]).cast("array<double>")
+    q = F.expr(sql_literal(query_vec, _DOUBLES))
     d2 = F.aggregate(
         F.zip_with(
             as_double(

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dug_data_ingest_spark.ext.dedup import (
     doc_shingles,
@@ -24,6 +25,7 @@ from dug_data_ingest_spark.ext.dedup import (
     simhash64,
     simhash_near_pairs,
 )
+from dug_data_ingest_spark.functions.constants import sql_literal
 from dug_data_ingest_spark.functions.vectors import as_double, cosine
 from dug_data_ingest_spark.ext.multimodal import (
     as_media,
@@ -650,15 +652,12 @@ def sim_topk_multiquery(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding")
         .collect()
     )
-    qlit = F.array(
-        *[
-            F.struct(
-                F.lit(qid).cast("bigint").alias("qid"),
-                F.array(*[F.lit(x) for x in qv]).alias("qv"),
-            )
-            for qid, qv in qrows
-        ]
+    # typed even when empty: array() of no structs is array<void>,
+    # whose q.qid no extract can resolve (a 0-row embeddings table)
+    qset = (
+        T.StructType().add("qid", T.LongType()).add("qv", T.ArrayType(T.DoubleType()))
     )
+    qlit = F.expr(sql_literal(qrows, T.ArrayType(qset)))
     scored = (
         emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
         .select("vec_id", "v", F.explode(qlit).alias("q"))
@@ -1700,7 +1699,7 @@ def sim_pq_topk_reranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     reranked = pq_topk_reranked(
         emb, codes, books, qv, k=10, shortlist=400, m=8, cand=cand
     )
-    q = F.lit([float(x) for x in qv]).cast("array<double>")
+    q = F.expr(sql_literal(qv, T.ArrayType(T.DoubleType())))
     d2 = F.aggregate(
         F.zip_with(
             as_double(
@@ -2052,7 +2051,7 @@ def sim_nearest_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     qv = _query_vec(spark, sf_dir)
-    q = F.array(*[F.lit(float(x)) for x in qv])
+    q = F.expr(sql_literal(qv, T.ArrayType(T.DoubleType())))
     raw = cosine(F.col("centroid"), q)
     return (
         label_centroids(emb)

@@ -421,7 +421,6 @@ def delta_sync_write(
     key_col: str,
     content_cols: list,
     commit_hook=None,
-    driver_diff_max_keys: int = _DRIVER_DIFF_MAX_KEYS,
 ) -> tuple[dict, list]:
     """Sync ``df`` into ``path`` keyed by ``key_col``, touching only
     what changed. Returns ``(stats, actions)`` where stats counts each
@@ -448,7 +447,7 @@ def delta_sync_write(
     partitions — the only data-sized Spark jobs in a sync.
 
     The diff itself is size-gated on key cardinality. At or below
-    ``driver_diff_max_keys`` keys the manifest is COLLECTED and the
+    ``_DRIVER_DIFF_MAX_KEYS`` (1 Mi) keys the manifest is COLLECTED and the
     diff runs driver-side on the in-memory list (the rclone file-list
     model — cheapest by far at the reference's 12-repo fan-out, zero
     shuffles). Above it — a store whose file list no longer belongs in
@@ -471,7 +470,7 @@ def delta_sync_write(
         eager=True
     )
     n_curr = curr_mf.count()  # checkpoint-sized job, not a data scan
-    escalate = n_curr > driver_diff_max_keys
+    escalate = n_curr > _DRIVER_DIFF_MAX_KEYS
 
     if not escalate:
         curr_rows = curr_mf.collect()

@@ -276,34 +276,3 @@ def test_bloom_staging_columns_survive(spark):
     assert (row["__bloom"], row["__bk"], row["__confirmed"]) == (11, 12, 13)
     assert row["__bloom_words"] == 14
     assert row["seen_exact"] is True
-
-
-def test_bloom_probe_literal_and_broadcast_paths_agree(spark, monkeypatch):
-    # r14: bloom_probe folds the bitmap into an array literal only up
-    # to _BLOOM_LITERAL_MAX_WORDS and falls back to the 1-row
-    # broadcast above it (an unbounded literal is MBs of SQL text per
-    # plan). The two physical paths must flag identically, and the
-    # broadcast path must not leak its staging column.
-    import dug_data_ingest_spark.ext.dedup as dd
-
-    hist = spark.createDataFrame(
-        [(i, f"doc {i}") for i in range(40)], "doc_id int, text string"
-    )
-    batch = spark.createDataFrame(
-        [(i, f"doc {i}" if i % 2 else f"new {i}") for i in range(30)]
-        + [(99, None)],
-        "doc_id int, text string",
-    )
-    words = dd.bloom_build(hist, m_bits=1 << 10)
-
-    def flags(df):
-        return {
-            (r["doc_id"], r["text"]): r["maybe_seen"] for r in df.collect()
-        }
-
-    lit = flags(dd.bloom_probe(batch, words))
-    monkeypatch.setattr(dd, "_BLOOM_LITERAL_MAX_WORDS", 0)
-    bcast_df = dd.bloom_probe(batch, words)
-    assert bcast_df.columns == ["doc_id", "text", "maybe_seen"]
-    assert flags(bcast_df) == lit
-    assert lit[(99, None)] is None  # NULL key -> NULL flag on both paths

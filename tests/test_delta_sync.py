@@ -253,11 +253,16 @@ _gen = st.dictionaries(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(gen1=_gen, gen2=_gen)
-def test_store_equals_generation_two_after_any_sync(spark, gate, gen1, gen2):
+def test_store_equals_generation_two_after_any_sync(
+    spark, monkeypatch, gate, gen1, gen2
+):
     import shutil
     import tempfile
 
-    kw = {} if gate is None else {"driver_diff_max_keys": gate}
+    from dug_data_ingest_spark.sources import delta_sync as ds
+
+    if gate is not None:
+        monkeypatch.setattr(ds, "_DRIVER_DIFF_MAX_KEYS", gate)
 
     def _df(gen):
         rows = [(k, v) for k, vs in gen.items() for v in vs]
@@ -265,14 +270,14 @@ def test_store_equals_generation_two_after_any_sync(spark, gate, gen1, gen2):
 
     path = tempfile.mkdtemp(prefix="delta-sync-prop-")
     try:
-        delta_sync_write(_df(gen1), path, "k", ["v"], **kw)
-        stats, _ = delta_sync_write(_df(gen2), path, "k", ["v"], **kw)
+        delta_sync_write(_df(gen1), path, "k", ["v"])
+        stats, _ = delta_sync_write(_df(gen2), path, "k", ["v"])
         back = spark.read.parquet(os.path.join(path, "data"))
         got = sorted((r.k, r.v) for r in back.collect())
         want = sorted((k, v) for k, vs in gen2.items() for v in vs)
         assert got == want
         # and a third pass is a no-op
-        stats3, _ = delta_sync_write(_df(gen2), path, "k", ["v"], **kw)
+        stats3, _ = delta_sync_write(_df(gen2), path, "k", ["v"])
         assert stats3["empty"]
     finally:
         shutil.rmtree(path, ignore_errors=True)
@@ -382,7 +387,7 @@ def test_manifest_is_order_insensitive(spark):
 
 
 # ---------------------------------------------------------------------------
-# Size-gated escalation: above driver_diff_max_keys the diff runs as
+# Size-gated escalation: above _DRIVER_DIFF_MAX_KEYS the diff runs as
 # the diff_manifests DataFrame plan (churn-bounded collect) instead of
 # the in-memory rclone file-list model. Forcing the gate to 0 pins the
 # escalated path to the driver path on identical generations: same
@@ -420,10 +425,11 @@ def test_escalated_diff_matches_driver_path(spark, commits, monkeypatch):
     drv = scratch_dir("test-delta-sync-gate-driver")
     esc = scratch_dir("test-delta-sync-gate-escalated")
     delta_sync_write(gen1, drv, "k", CONTENT)
-    delta_sync_write(gen1, esc, "k", CONTENT, driver_diff_max_keys=0)
     d_stats, d_actions = delta_sync_write(gen2, drv, "k", CONTENT, commit_hook=hook)
+    monkeypatch.setattr(ds, "_DRIVER_DIFF_MAX_KEYS", 0)
+    delta_sync_write(gen1, esc, "k", CONTENT)
     e_stats, e_actions = delta_sync_write(
-        gen2, esc, "k", CONTENT, commit_hook=hook, driver_diff_max_keys=0
+        gen2, esc, "k", CONTENT, commit_hook=hook
     )
 
     # every action type exercised, both paths agree on the counts
@@ -450,31 +456,30 @@ def test_escalated_diff_matches_driver_path(spark, commits, monkeypatch):
     # unchanged escalated re-run: empty stats, keep-only (so no
     # actions at all), zero objects touched, no version published
     before = _file_states(esc)
-    stats3, actions3 = delta_sync_write(
-        gen2, esc, "k", CONTENT, commit_hook=hook, driver_diff_max_keys=0
-    )
+    stats3, actions3 = delta_sync_write(gen2, esc, "k", CONTENT, commit_hook=hook)
     assert stats3["empty"] and actions3 == []
     assert stats3["keep"] == len(e_mf)
     assert _file_states(esc) == before
     assert len(calls) == 2
 
 
-def test_escalated_bad_key_fails_loudly_before_any_mutation(spark, commits):
+def test_escalated_bad_key_fails_loudly_before_any_mutation(
+    spark, commits, monkeypatch
+):
+    from dug_data_ingest_spark.sources import delta_sync as ds
+
+    monkeypatch.setattr(ds, "_DRIVER_DIFF_MAX_KEYS", 0)
     calls, hook = commits
     path = scratch_dir("test-delta-sync-gate-badkey")
     bad = _orders(spark).withColumn(
         "k", F.concat(F.col("k"), F.lit(" bad/key"))
     )
     with pytest.raises(ValueError, match="delta-sync key"):
-        delta_sync_write(
-            bad, path, "k", CONTENT, commit_hook=hook, driver_diff_max_keys=0
-        )
+        delta_sync_write(bad, path, "k", CONTENT, commit_hook=hook)
     nullk = _orders(spark).withColumn(
         "k", F.when(F.col("o_orderkey") % 5 == 0, None).otherwise(F.col("k"))
     )
     with pytest.raises(ValueError, match="NULL"):
-        delta_sync_write(
-            nullk, path, "k", CONTENT, commit_hook=hook, driver_diff_max_keys=0
-        )
+        delta_sync_write(nullk, path, "k", CONTENT, commit_hook=hook)
     assert calls == []
     assert not os.path.exists(os.path.join(path, "data"))

@@ -14,12 +14,14 @@ import math
 import re
 
 import pyspark.sql.functions as F
+import pytest
 
 from dug_data_ingest_spark.ext.curation import (
     bucket_distribution,
     dsir_log_weights,
     dsir_resample,
     hashed_ngram_ids,
+    nb_quality_log_odds,
 )
 from dug_data_ingest_spark.functions.text import normalized_words
 
@@ -180,3 +182,15 @@ def test_dsir_scoring_plan_is_shuffle_free(spark):
     sel = dsir_resample(raw, target, k=3, n_buckets=B)
     splan = sel._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in splan, splan
+
+
+@pytest.mark.parametrize("alpha", [0.0, -1.0, math.inf, math.nan])
+@pytest.mark.parametrize("fit", [dsir_log_weights, nb_quality_log_odds])
+def test_smoothing_rejects_alpha_outside_finite_positive(spark, fit, alpha):
+    # add-alpha smoothing is only defined for a finite alpha > 0: at 0
+    # an empty bucket's log-probability is log(0), at inf every ratio
+    # is NaN. Both fits share one check and name the parameter.
+    raw, target = _frames(spark)
+    args = (raw, target) if fit is dsir_log_weights else (raw, target, raw)
+    with pytest.raises(ValueError, match="alpha"):
+        fit(*args, n_buckets=B, alpha=alpha)

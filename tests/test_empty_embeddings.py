@@ -1,8 +1,9 @@
 """An empty embeddings table is a defined input for the similarity
 slugs: those that search with the vec_id = 0 query row raise a typed
-ValueError naming that row instead of failing on ``None[0]``, and the
+ValueError naming that row instead of failing on ``None[0]``; the
 recall gauges match their oracle's (0, 0, NULL) row instead of raising
-a divide-by-zero."""
+a divide-by-zero; and the batch search over an empty query set matches
+its oracle's empty result."""
 
 from __future__ import annotations
 
@@ -27,12 +28,22 @@ def test_empty_embeddings_raise_typed_error(spark, empty_dir, slug):
         all_queries()[slug](spark, str(empty_dir))
 
 
-@pytest.mark.parametrize("slug", ["sim-lsh-recall", "sim-lsh-recall-banded"])
-def test_empty_embeddings_recall_matches_oracle(spark, empty_dir, slug):
+def _oracle_rows(spark, empty_dir, slug):
     df = all_queries()[slug](spark, str(empty_dir))
     with duckdb.connect() as con:
         con.execute(
             f"CREATE VIEW embeddings AS SELECT * FROM '{empty_dir}/embeddings.parquet'"
         )
         assert_frames_match(df, con.sql(all_oracles()[slug]), slug)
-    assert [tuple(r) for r in df.collect()] == [(0, 0, None)]
+    return [tuple(r) for r in df.collect()]
+
+
+@pytest.mark.parametrize("slug", ["sim-lsh-recall", "sim-lsh-recall-banded"])
+def test_empty_embeddings_recall_matches_oracle(spark, empty_dir, slug):
+    assert _oracle_rows(spark, empty_dir, slug) == [(0, 0, None)]
+
+
+def test_empty_embeddings_multiquery_matches_oracle(spark, empty_dir):
+    # no query rows: the folded query set is a typed empty array, not
+    # array<void> (whose q.qid extract cannot resolve)
+    assert _oracle_rows(spark, empty_dir, "sim-topk-multiquery") == []

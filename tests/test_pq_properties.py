@@ -146,6 +146,45 @@ def test_pq_compression_finds_the_planted_neighbor(spark):
     assert {r.vec_id for r in top} == {0, 1, 2, 3}
 
 
+def test_pq_encode_textbook_size_broadcasts_the_codebook(spark):
+    # m=8, k=256 on 768-dim vectors (Jegou et al. 2011's settings): the
+    # codebook is 8 * 256 * (1 + 96) values, above the literal cap, so
+    # it rides a 1-row broadcast instead of megabytes of SQL text.
+    # Integer values keep every squared distance exact, so numpy's
+    # argmin (first minimum = lowest cluster id) is the exact reference
+    # model, ties included.
+    import numpy as np
+
+    dim, m, k = 768, 8, 256
+    d = dim // m
+    rng = np.random.default_rng(7)
+    books = rng.integers(-4, 5, size=(m, k, d))
+    vecs = rng.integers(-4, 5, size=(12, dim))
+    books_df = spark.createDataFrame(
+        [
+            (s, c, [float(x) for x in books[s, c]])
+            for s in range(m)
+            for c in range(k)
+        ],
+        "subspace int, cluster int, centroid array<double>",
+    )
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id int, embedding array<double>",
+    )
+    coded = pq_encode(df, books_df, m=m, dim=dim)
+    plan = coded._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" in plan, plan
+    want = {
+        i: [
+            int(np.argmin(((vecs[i, s * d : (s + 1) * d] - books[s]) ** 2).sum(axis=1)))
+            for s in range(m)
+        ]
+        for i in range(len(vecs))
+    }
+    assert {r.vec_id: list(r.codes) for r in coded.collect()} == want
+
+
 def test_pq_rejects_ragged_subspaces(spark):
     import pytest
 

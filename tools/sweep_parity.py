@@ -3,12 +3,15 @@ under a VANILLA SparkSession, strict compare (floats bit-for-bit via
 repr — stricter than the driver's 6-decimal normalization).
 
     python tools/sweep_parity.py [sf] [master] [shuffle_partitions] [aqe]
+        [--only SLUG,SLUG,...]
 
 Defaults: sf 0.01, master local[32], Spark's default shuffle
 partitions (200 on a vanilla session). Prints FAIL/ERROR lines as
 they happen and one JSON summary line at the end. Run at sf 0.01 AND
 0.1 before every round close (SURVEY §6 layer 2); tests/ only cover
-sf0.001.
+sf0.001. ``--only`` restricts the sweep to the named slugs, so a
+change can be verified in seconds instead of re-running the whole
+registry (an unregistered name is reported as an ERROR).
 
 The third arg is the determinism probe: an adversarial partition
 count that divides nothing evenly (e.g. 7) reshapes every shuffle's
@@ -38,18 +41,25 @@ import traceback
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
-    "region", "nation", "customer", "supplier", "part",
+    "region", "nation", "customer", "supplier", "part", "partsupp",
     "orders", "lineitem", "events", "documents", "embeddings",
+    "files", "studies", "variables", "media", "ticks",
 ]
 
 
 def main() -> int:
-    sf = sys.argv[1] if len(sys.argv) > 1 else "0.01"
-    master = sys.argv[2] if len(sys.argv) > 2 else "local[32]"
-    shuffle_partitions = sys.argv[3] if len(sys.argv) > 3 else None
+    args = sys.argv[1:]
+    only = None
+    if "--only" in args:
+        i = args.index("--only")
+        only = args[i + 1].split(",")
+        del args[i : i + 2]
+    sf = args[0] if len(args) > 0 else "0.01"
+    master = args[1] if len(args) > 1 else "local[32]"
+    shuffle_partitions = args[2] if len(args) > 2 else None
     if shuffle_partitions == "":
         shuffle_partitions = None
-    aqe = sys.argv[4] if len(sys.argv) > 4 else "on"
+    aqe = args[3] if len(args) > 3 else "on"
     sf_dir = f"/root/testdata/sf{sf}"
 
     import duckdb
@@ -72,9 +82,10 @@ def main() -> int:
     qs, oracles = e.queries(), e.oracle_sql()
     con = duckdb.connect()
     for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+        if os.path.exists(f"{sf_dir}/{t}.parquet"):
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+            )
 
     def norm(d):
         return sorted(
@@ -82,9 +93,9 @@ def main() -> int:
         )
 
     fails, n_ok = [], 0
-    for slug, fn in qs.items():
+    for slug in qs if only is None else only:
         try:
-            sp = fn(spark, sf_dir).toPandas()
+            sp = qs[slug](spark, sf_dir).toPandas()
             if slug in oracles:
                 du = con.sql(oracles[slug]).df()
                 ok = norm(sp) == norm(du)
@@ -103,7 +114,8 @@ def main() -> int:
     print(json.dumps({"sf": sf, "master": master,
                       "shuffle_partitions": shuffle_partitions,
                       "aqe": aqe,
-                      "ok": n_ok, "total": len(qs), "fails": fails}))
+                      "ok": n_ok, "total": n_ok + len(fails),
+                      "fails": fails}))
     return 1 if fails else 0
 
 
