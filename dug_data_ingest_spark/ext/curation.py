@@ -25,7 +25,7 @@ from dug_data_ingest_spark.ext.dedup import (
     doc_shingles,
     paragraph_dedup,
 )
-from dug_data_ingest_spark.functions.constants import fold_or_broadcast
+from dug_data_ingest_spark.functions.constants import fold_or_broadcast, free_name
 from dug_data_ingest_spark.functions.text import n_words, normalized_words
 
 
@@ -200,14 +200,10 @@ def gate_documents(
 
     text = F.col(text_col)
 
-    # every staging column gets the same suffix-until-free guard: an
-    # input that already carries a __gate_* column must come back with
-    # it intact, not silently overwritten and dropped
-    def _free(base: str) -> str:
-        name = base
-        while name in docs.columns:
-            name += "_"
-        return name
+    # every staging column gets a free_name: an input that already
+    # carries a __gate_* column must come back with it intact, not
+    # silently overwritten and dropped
+    taken = docs.columns
 
     # Staging discipline (r13, guide §1.2 "per-task work"): every
     # shared array/struct becomes a REAL column in its own projection
@@ -217,13 +213,13 @@ def gate_documents(
     # aggregates PER ROW (plans/r13/curate-gate-documents_before.txt);
     # Catalyst keeps the stages because CollapseProject refuses to
     # inline a non-cheap alias referenced more than once.
-    words_col = _free("__gate_words")        # normalized words (shingles, stopwords)
-    ws_col = _free("__gate_ws")              # whitespace tokens (quality ratios)
-    lines_col = _free("__gate_lines")        # stripped lines (bullet/dup/C4 rules)
-    paras_col = _free("__gate_paras")        # stripped paragraphs
-    stat_cols = {k: _free(f"__gate_st{k}") for k in range(2, 11)}
-    stl_col, stp_col = _free("__gate_stl"), _free("__gate_stp")
-    c4n_col = _free("__gate_c4n")
+    words_col = free_name(taken, "__gate_words")  # normalized words (shingles, stopwords)
+    ws_col = free_name(taken, "__gate_ws")        # whitespace tokens (quality ratios)
+    lines_col = free_name(taken, "__gate_lines")  # stripped lines (bullet/dup/C4 rules)
+    paras_col = free_name(taken, "__gate_paras")  # stripped paragraphs
+    stat_cols = {k: free_name(taken, f"__gate_st{k}") for k in range(2, 11)}
+    stl_col, stp_col = (free_name(taken, b) for b in ("__gate_stl", "__gate_stp"))
+    c4n_col = free_name(taken, "__gate_c4n")
 
     # staged columns are built as SQL strings (one JVM parse each, the
     # functions/text.py SQL-twin convention) and in THREE selectExpr
@@ -715,9 +711,7 @@ def dsir_log_weights(
     ``hash_sample`` slice per the contract above.
     """
     ids = hashed_ngram_ids(normalized_words(F.col(text_col)), n_buckets)
-    ids_col = "__dsir_ids"
-    while ids_col in raw.columns:
-        ids_col += "_"
+    ids_col = free_name(raw.columns, "__dsir_ids")
     # lazy: the fit job below is the first action and materializes the
     # snapshot in-line (one fewer blocking construction job)
     raw_ids = raw.withColumn(ids_col, ids).localCheckpoint(eager=False)
@@ -893,14 +887,11 @@ def perplexity_buckets(
         raise ValueError(f"fractions must be strictly increasing in (0,1): {fractions}")
     if bucket_col in docs.columns:
         raise ValueError(f"docs already has a {bucket_col!r} column")
-    # staging columns are collision-guarded like gate_documents' (a
-    # caller's own __ppl_* column must come back intact, never be
-    # silently consumed)
-    cuts_col, key_col = "__ppl_cuts", "__ppl_g"
-    while cuts_col in docs.columns:
-        cuts_col += "_"
-    while key_col in docs.columns:
-        key_col += "_"
+    # free staging names: a caller's own __ppl_* column must come back
+    # intact, never be silently consumed
+    cuts_col, key_col = (
+        free_name(docs.columns, b) for b in ("__ppl_cuts", "__ppl_g")
+    )
     # one internal orientation: bucket by s = score (ascending) or
     # s = -score (descending), so cuts and comparisons share a code path
     s = F.col(score_col) if ascending else -F.col(score_col)
@@ -1283,7 +1274,7 @@ def _kn_tables(
     corpus-wide bigram explode + aggregation (measured: 5 corpus scans
     in the executed plan; 2 after). Vocabulary-bounded, so the
     materialization is small; lazy — the first consumer materializes
-    it (the ivf_pq_index residuals idiom)."""
+    it."""
     counts = (
         corpus_bi.groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("n_big"))

@@ -27,7 +27,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from dug_data_ingest_spark.functions.constants import fold_or_broadcast, sql_literal
+from dug_data_ingest_spark.functions.constants import (
+    fold_or_broadcast,
+    free_name,
+    sql_literal,
+)
 from dug_data_ingest_spark.functions.text import normalized_words, shingles_of
 
 log = logging.getLogger(__name__)
@@ -1599,17 +1603,8 @@ def bloom_prefilter_exact(
     """
     words = bloom_build(history, key_col=key_col, m_bits=m_bits, k_hashes=k_hashes)
 
-    # suffix-until-free staging guard (the gate_documents convention)
-    def _free(base: str) -> str:
-        name = base
-        while name in batch.columns:
-            name += "_"
-        return name
-
     bloom_col, bk_col, conf_col = (
-        _free("__bloom"),
-        _free("__bk"),
-        _free("__confirmed"),
+        free_name(batch.columns, b) for b in ("__bloom", "__bk", "__confirmed")
     )
     probed = bloom_probe(
         batch, words, key_col=key_col, k_hashes=k_hashes, flag_col=bloom_col

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -21,6 +21,17 @@ from dug_data_ingest_spark.functions.constants import fold_or_broadcast, sql_lit
 from dug_data_ingest_spark.functions.vectors import as_double, cosine, dot
 
 _DOUBLES = T.ArrayType(T.DoubleType())
+# a collected codebook row; one subspace's (cluster, centroid) entries
+# sorted by cluster (a k-means centroid table is one such list); and
+# the whole codebook as one constant, entry s for subspace s
+_PQ_ROW = (
+    T.StructType()
+    .add("subspace", T.IntegerType())
+    .add("cluster", T.IntegerType())
+    .add("centroid", _DOUBLES)
+)
+_CELLS = T.ArrayType(T.StructType(_PQ_ROW.fields[1:]))
+_PQ_BOOKS = T.ArrayType(_CELLS)
 
 
 def _scored(
@@ -398,37 +409,33 @@ def lsh_banded_pairs(
     )
 
 
-def _assign(embeddings: DataFrame, cents: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """Nearest-centroid assignment by squared L2 — one broadcast join
-    (centroids are k rows) + a window-free argmin via groupBy-min
-    struct ordering. Deterministic tie-break on cluster id."""
-    dist2 = F.aggregate(
-        F.zip_with(
-            as_double(F.col(vec_col)), F.col("centroid"), lambda x, y: (x - y) * (x - y)
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    # Raw doubles, NOT rounded: the DuckDB oracle's argmin orders by
-    # the un-rounded distance, and both engines fold the squared
-    # differences left-to-right over array positions, so the doubles
-    # match bit-for-bit — rounding on one side only would flip
-    # tie-breaks for clusters within the rounding epsilon.
-    scored = embeddings.join(F.broadcast(cents)).select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.col("cluster"),
-        dist2.alias("d2"),
-    )
-    best = F.min(F.struct(F.col("d2"), F.col("cluster"))).alias("best")
-    return (
-        scored.groupBy(id_col)
-        .agg(best, F.first(vec_col).alias(vec_col))
-        .select(
+def _cell_table(centroids: list) -> list[tuple[int, list[float]]]:
+    """(cluster, centroid) pairs as a ``_CELLS`` value, sorted by
+    cluster."""
+    return sorted((int(c), [float(x) for x in v]) for c, v in centroids)
+
+
+def _assign(
+    embeddings: DataFrame, centroids: list, id_col: str, vec_col: str
+) -> DataFrame:
+    """(id, vec, cluster): each vector's nearest centroid by squared L2,
+    over ``centroids`` given as (cluster, centroid) pairs (the rows
+    kmeans_centroids returns). The centroid table folds into the plan
+    (``fold_or_broadcast``) and the argmin is ``_pq_argmin``, so the
+    assignment is a row-local projection: no join, no shuffle. Raw
+    doubles, NOT rounded: the DuckDB oracle's argmin orders by the
+    un-rounded distance, and both engines fold (x-y)^2 left to right
+    over array positions with the lowest-cluster tie-break, so the
+    assignments match bit for bit."""
+    return fold_or_broadcast(
+        embeddings,
+        _cell_table(centroids),
+        _CELLS,
+        lambda df, cells: df.select(
             F.col(id_col),
             F.col(vec_col),
-            F.col("best.cluster").alias("cluster"),
-        )
+            _pq_argmin(cells, as_double(F.col(vec_col))).alias("cluster"),
+        ),
     )
 
 
@@ -438,44 +445,33 @@ def kmeans_centroids(
     n_iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    with_centroids: bool = False,
-) -> DataFrame:
-    """Lloyd's k-means on DataFrames — the learned coarse quantizer
-    for IVF (ivf_topk uses stored labels; this learns real cells).
+) -> list[Row]:
+    """Lloyd's k-means — the learned coarse quantizer for IVF
+    (ivf_topk uses stored labels; this learns real cells). Returns
+    the collected (cluster, centroid) rows, at most k; ``_assign``
+    against them gives the cell of every vector.
 
-    Deterministic: init assigns cluster = id % k (seeded-sample init
-    would work too but breaks oracle replay); each iteration is
-    (assign: broadcast join + argmin) → (update: posexplode +
-    per-position mean), i.e. one shuffle per iteration on (cluster,
-    pos). k and dim are small (centroids always fit one broadcast);
-    the corpus is never shuffled — only scanned per iteration.
-
-    Returns (cluster, n_members); with ``with_centroids=True`` also
-    the learned ``centroid`` vector per cell (the coarse-quantizer
-    table an IVF probe broadcasts). The oracle-replayed query keeps
-    the default: per-position avg() goes through partial aggregation
-    in partition order, so centroid doubles are not guaranteed
-    bit-identical across engines, while populations are exact.
-    """
-    from dug_data_ingest_spark.ext.dedup import fan_out
-
-    if with_centroids and n_iters < 1:
-        raise ValueError(
-            "kmeans_centroids: with_centroids requires n_iters >= 1 "
-            "(no centroid table exists before the first update step)"
-        )
-    assigned = fan_out(embeddings).select(
-        F.col(id_col), F.col(vec_col), (F.col(id_col) % k).cast("int").alias("cluster")
+    It is PQ with one subspace: the one Lloyd loop (``_lloyd``) over
+    the whole vector. Deterministic: init cluster = id % k
+    (seeded-sample init would work too but breaks oracle replay); each
+    round is one map-side-combined (cluster, pos) mean update, collected
+    (k x dim values), then a row-local re-assignment against the
+    folded centroids. The corpus is scanned once per round and never
+    shuffled. Learned centroid doubles are not guaranteed bit-identical
+    across engines (avg() merges partial sums in partition order), so
+    the oracle-replayed slug grades populations, which are exact."""
+    rows = _lloyd(
+        embeddings.select(
+            F.col(id_col),
+            F.lit(0).alias("subspace"),
+            as_double(F.col(vec_col)).alias("subvec"),
+        ),
+        k,
+        n_iters,
+        id_col,
+        "kmeans_centroids",
     )
-    cents = None
-    for _ in range(n_iters):
-        # the update step IS label_centroids with cluster as the label
-        cents = label_centroids(assigned, "cluster", vec_col)
-        assigned = _assign(embeddings, cents, id_col, vec_col)
-    pops = assigned.groupBy("cluster").agg(F.count("*").alias("n_members"))
-    if with_centroids and cents is not None:
-        return pops.join(cents, "cluster").select("cluster", "centroid", "n_members")
-    return pops
+    return [Row(cluster=r.cluster, centroid=r.centroid) for r in rows]
 
 
 def cosine_dup_pairs(
@@ -513,7 +509,7 @@ def semantic_dedup(
     threshold: float = 0.95,
     n_cells: int = 8,
     n_iters: int = 2,
-    centroids: DataFrame | None = None,
+    centroids: list | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame]:
@@ -527,17 +523,17 @@ def semantic_dedup(
 
     Composition of existing verified parts: ``kmeans_centroids``
     (deterministic Lloyd; or pass precomputed ``centroids`` —
-    (cluster, centroid) rows — to skip training), ``_assign``
-    (broadcast-join argmin, corpus never shuffled),
+    (cluster, centroid) pairs — to skip training), ``_assign``
+    (row-local argmin over the folded centroids, no shuffle),
     ``cosine_dup_pairs`` blocked on the learned cell,
     ``non_canonical_ids`` (min-label components, adaptive pointer
     jumping), and a broadcast-friendly LEFT ANTI for the survivors.
 
-    Scale shape: centroids are k rows (always broadcast); the one
+    Scale shape: centroids are k rows, folded into the plan; the one
     quadratic step is the within-cell pair join, ~ (n/k)^2 per cell —
     size ``n_cells`` so a cell fits a task budget (the published
     recipe uses k ~ 11k cells for a 100M-embedding corpus, the same
-    n/k arithmetic). The corpus is scanned per k-means iteration and
+    n/k arithmetic). The corpus is scanned once per k-means round and
     shuffled only on the cell id for the pair join.
 
     Inherent recall caveat (the technique's, not this plan's): a
@@ -551,15 +547,9 @@ def semantic_dedup(
     """
     if centroids is None:
         centroids = kmeans_centroids(
-            embeddings,
-            k=n_cells,
-            n_iters=n_iters,
-            id_col=id_col,
-            vec_col=vec_col,
-            with_centroids=True,
+            embeddings, k=n_cells, n_iters=n_iters, id_col=id_col, vec_col=vec_col
         )
-    cents = centroids.select("cluster", "centroid")
-    assigned = _assign(embeddings, cents, id_col, vec_col)
+    assigned = _assign(embeddings, centroids, id_col, vec_col)
     pairs = cosine_dup_pairs(
         assigned, threshold, block_col="cluster", id_col=id_col, vec_col=vec_col
     )
@@ -577,11 +567,11 @@ def semantic_dedup(
 # each quantized to its own k-centroid codebook), a 32x-64x
 # compression, and query scoring becomes m table lookups per vector
 # (asymmetric distance, ADC) instead of d multiplies. Spark shape:
-# training is Lloyd over the (id x subspace) exploded frame — ONE
-# assign shuffle per iteration for ALL subspaces together, corpus
-# scanned never shuffled; codebooks are m*k rows and always
-# broadcast; encoded scoring is a row-local expression over a
-# distance table folded into the plan (fold_or_broadcast: a literal
+# training is the one Lloyd loop over the (id x subspace) exploded
+# frame — ONE mean-update shuffle per round for ALL subspaces
+# together, corpus scanned never shuffled; codebooks are m*k rows;
+# encoded scoring is a row-local expression over a distance table
+# folded into the plan (fold_or_broadcast: a literal
 # up to _LITERAL_MAX_ELEMS values, a 1-row broadcast above), so top-k
 # plans as TakeOrderedAndProject.
 # Exact arithmetic is pinned to a numpy reference model in
@@ -612,6 +602,67 @@ def _pq_subvectors(
     )
 
 
+def _lloyd(
+    sub: DataFrame, k: int, n_iters: int, id_col: str, caller: str
+) -> list[Row]:
+    """Deterministic Lloyd over the (id, subspace, subvec) frame
+    ``sub``, every subspace at once: the one fit behind pq_train and
+    kmeans_centroids (one subspace). Returns the collected
+    (subspace, cluster, centroid) rows; none for an empty frame.
+
+    Init cluster = id % k (replayable, no RNG). Each round is ONE
+    map-side-combined (subspace, cluster, pos) mean — posexploded, so
+    no dimension argument — collected in one bounded job (k x dim
+    values at any corpus size) and assembled on the driver;
+    re-assignment folds the collected centroids into the row-local
+    ``_pq_argmin`` (``fold_or_broadcast``). No join and no per-round
+    corpus exchange: the corpus is scanned once per round, never
+    shuffled. The rows are one learned snapshot by construction, so
+    every consumer reads the same centroids (the avg
+    partial-merge-order caveat cannot produce divergent copies)."""
+    if n_iters < 1:
+        raise ValueError(
+            f"{caller}: n_iters must be >= 1 (got {n_iters}); no "
+            "centroid exists before the first update step"
+        )
+    assigned = sub.withColumn("cluster", (F.col(id_col) % k).cast("int"))
+    cents: dict[tuple[int, int], list[float]] = {}
+    for it in range(n_iters):
+        if it:
+            # element_at on the folded all-subspace codebook (entry s:
+            # subspace s's (cluster, centroid) list, sorted by cluster)
+            # selects the row's candidate list
+            books = [
+                [(c, v) for (s2, c), v in cents.items() if s2 == s]
+                for s in range(1 + max(s for s, _ in cents))
+            ]
+            assigned = fold_or_broadcast(
+                sub,
+                books,
+                _PQ_BOOKS,
+                lambda df, b: df.withColumn(
+                    "cluster",
+                    _pq_argmin(
+                        F.element_at(b, F.col("subspace") + 1), F.col("subvec")
+                    ),
+                ),
+            )
+        means: dict[tuple[int, int], dict[int, float]] = {}
+        for r in (
+            assigned.select(
+                "subspace", "cluster", F.posexplode("subvec").alias("pos", "x")
+            )
+            .groupBy("subspace", "cluster", "pos")
+            .agg(F.avg("x").alias("x"))
+            .collect()
+        ):
+            means.setdefault((r.subspace, r.cluster), {})[r.pos] = r.x
+        if not means:  # an empty corpus has no centroids to refine
+            break
+        cents = {key: [v[p] for p in sorted(v)] for key, v in sorted(means.items())}
+    return [Row(subspace=s, cluster=c, centroid=v) for (s, c), v in cents.items()]
+
+
 def pq_train(
     embeddings: DataFrame,
     m: int = 8,
@@ -621,74 +672,18 @@ def pq_train(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Learn PQ codebooks: (subspace, cluster, centroid[d/m]).
-
-    Deterministic Lloyd, all m subspaces in one pipeline: init
-    cluster = id % k (the kmeans_centroids convention — replayable,
-    no RNG). EAGER since r14: each round is ONE map-side-combined
-    (subspace, cluster) groupBy whose d per-position means land in one
-    bounded collect (m*k rows at any corpus size), and re-assignment
-    folds the collected centroids into a row-local argmin
-    (fold_or_broadcast: a literal while m*k*(d+1) values fit the cap,
-    a 1-row broadcast above it) — no broadcast join, no per-iteration
-    (id, subspace) argmin shuffle, no per-round corpus exchange at
-    all (the corpus is scanned once per round, never shuffled). The
+    """Learn PQ codebooks: (subspace, cluster, centroid[d/m]) — the one
+    Lloyd fit (``_lloyd``) over the m contiguous d/m-dim slices. The
     returned codebook is a local-relation DataFrame, so a caller's
-    collect()/broadcast of it is free and every consumer reads the ONE
-    learned snapshot (the avg partial-merge-order caveat cannot
-    produce divergent copies)."""
-    if n_iters < 1:
-        raise ValueError(
-            f"pq_train: n_iters must be >= 1 (got {n_iters}); no "
-            "codebook exists before the first update step"
-        )
-    d = dim // m
-    sub = _pq_subvectors(embeddings, m, dim, id_col, vec_col)
-    rows = None
-    for it in range(n_iters):
-        if it == 0:
-            assigned = sub.withColumn(
-                "cluster", (F.col(id_col) % k).cast("int")
-            )
-        else:
-            # element_at on the folded all-subspace codebook selects
-            # the row's candidate list: the re-assignment is row-local,
-            # no broadcast join, no corpus-wide argmin groupBy
-            assigned = fold_or_broadcast(
-                sub,
-                _pq_books_by_subspace(rows, m, d, "pq_train"),
-                _PQ_BOOKS,
-                lambda df, books: df.withColumn(
-                    "cluster",
-                    _pq_argmin(
-                        F.element_at(books, F.col("subspace") + 1),
-                        F.col("subvec"),
-                    ),
-                ),
-            )
-        means = assigned.groupBy("subspace", "cluster").agg(
-            *[
-                F.avg(F.element_at("subvec", p + 1)).alias(f"_p{p}")
-                for p in range(d)
-            ]
-        )
-        rows = means.select(
-            "subspace",
-            "cluster",
-            F.array(*[F.col(f"_p{p}") for p in range(d)]).alias("centroid"),
-        ).collect()
+    collect()/broadcast of it is free."""
+    rows = _lloyd(
+        _pq_subvectors(embeddings, m, dim, id_col, vec_col),
+        k,
+        n_iters,
+        id_col,
+        "pq_train",
+    )
     return _pq_books_df(embeddings.sparkSession, rows)
-
-
-# a collected codebook row, and the whole codebook as one constant:
-# entry s is subspace s's (cluster, centroid) entries sorted by cluster
-_PQ_ROW = (
-    T.StructType()
-    .add("subspace", T.IntegerType())
-    .add("cluster", T.IntegerType())
-    .add("centroid", _DOUBLES)
-)
-_PQ_BOOKS = T.ArrayType(T.ArrayType(T.StructType(_PQ_ROW.fields[1:])))
 
 
 def _pq_books_df(spark: SparkSession, rows: list) -> DataFrame:
@@ -1011,33 +1006,36 @@ def ivf_pq_index(
     vec_col: str = "embedding",
 ) -> tuple[list, DataFrame, DataFrame]:
     """Build the index: returns ``(cells, codebooks, coded)`` where
-    cells is the COLLECTED coarse-quantizer table [(cluster,
-    centroid, n_members)] (n_cells rows — the IVF probe list), and
-    coded is (id, cell, codes[m]) — the compressed inverted file.
-    One Lloyd pipeline for the coarse quantizer, one for the m
-    sub-codebooks; the corpus is scanned per iteration, never
-    shuffled except the (cluster, pos) mean updates."""
-    cells_df = kmeans_centroids(
-        embeddings, k=n_cells, n_iters=n_iters, id_col=id_col,
-        vec_col=vec_col, with_centroids=True,
+    cells is the coarse quantizer's collected (cluster, centroid) rows
+    (kmeans_centroids, at most n_cells — the IVF probe list), and
+    coded is (id, cell, codes[m]) — the compressed inverted file. The
+    cell is the row-local ``_pq_argmin`` (as in ``_assign``) and the
+    residual subtracts that cell's centroid, both against ONE folded
+    centroid table, so the residual frame is a projection of the scan
+    that PQ trains and encodes on — cheap to recompute per Lloyd
+    round, hence not snapshotted. The corpus is scanned once per round,
+    never shuffled."""
+    cells = kmeans_centroids(
+        embeddings, k=n_cells, n_iters=n_iters, id_col=id_col, vec_col=vec_col
     )
-    cents = cells_df.select("cluster", "centroid")
-    assigned = _assign(embeddings, cents, id_col, vec_col)
-    residuals = assigned.join(F.broadcast(cents), "cluster").select(
-        F.col(id_col),
-        F.col("cluster").alias("cell"),
-        F.zip_with(
-            as_double(_dim_checked(F.col(vec_col), dim, "ivf_pq_index")),
-            F.col("centroid"),
-            lambda x, c: x - c,
-        ).alias("residual"),
-    # localCheckpoint: residuals feed every pq_train iteration, the
-    # encode pass, and the final cell join — uncheckpointed, the
-    # corpus-wide argmin + residual subtraction would re-execute
-    # ~(2*n_iters + 3) times per index build (the duplicate_clusters
-    # lineage-truncation idiom; lazy — the first consumer
-    # materializes it)
-    ).localCheckpoint(eager=False)
+    vec = as_double(_dim_checked(F.col(vec_col), dim, "ivf_pq_index"))
+
+    def residual(df: DataFrame, cs: Column) -> DataFrame:
+        nearest = F.filter(cs, lambda e: e["cluster"] == F.col("cell"))[0]
+        return df.withColumn("cell", _pq_argmin(cs, vec)).select(
+            F.col(id_col),
+            F.col("cell"),
+            F.zip_with(vec, nearest["centroid"], lambda x, c: x - c).alias(
+                "residual"
+            ),
+        )
+
+    residuals = fold_or_broadcast(
+        embeddings,
+        _cell_table(cells),
+        _CELLS,
+        residual,
+    )
     books = pq_train(
         residuals, m=m, k=k, n_iters=n_iters, dim=dim,
         id_col=id_col, vec_col="residual",
@@ -1050,7 +1048,7 @@ def ivf_pq_index(
     coded = _pq_encoded(
         residuals, rows, m, dim, "residual", [F.col(id_col), F.col("cell")]
     )
-    return cells_df.collect(), books, coded
+    return cells, books, coded
 
 
 def ivf_pq_topk(

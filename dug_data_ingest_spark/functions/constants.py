@@ -11,7 +11,9 @@ value instead of a joined copy. Above ``_LITERAL_MAX_ELEMS`` leaf
 values the SQL text itself becomes the cost (megabytes parsed and
 analyzed per plan), so ``fold_or_broadcast`` ships the value as a
 1-row broadcast instead: sent once per executor, still no shuffle of
-the frame it is applied to.
+the frame it is applied to. ``free_name`` names that broadcast's
+staging column, and every other staging column the engine adds to a
+caller's frame.
 """
 
 from __future__ import annotations
@@ -70,6 +72,19 @@ def sql_literal(value: Any, dtype: T.DataType) -> str:
     raise TypeError(f"sql_literal: unsupported type {dtype.simpleString()}")
 
 
+def free_name(columns: list[str], base: str) -> str:
+    """``base``, suffixed with ``_`` until no name in ``columns`` equals
+    it case-insensitively — the staging-column name that cannot
+    shadow a caller's column, since Spark resolves names
+    case-insensitively (``withColumn("__x", …)`` on a frame with
+    ``__X`` replaces ``__X``)."""
+    taken = {c.lower() for c in columns}
+    name = base
+    while name.lower() in taken:
+        name += "_"
+    return name
+
+
 def _leaves(value: Any, dtype: T.DataType) -> int:
     if isinstance(dtype, T.ArrayType):
         return sum(_leaves(v, dtype.elementType) for v in value)
@@ -88,17 +103,13 @@ def fold_or_broadcast(
     ``dtype``) on every row of ``df``.
 
     Up to ``_LITERAL_MAX_ELEMS`` leaf values ``col`` is the folded
-    ``sql_literal``. Above it ``col`` is a staging column attached by a
-    crossJoin with a 1-row broadcast of the value; its name is
-    suffixed until no column of ``df`` collides with it, and it is
-    dropped from ``use``'s result. Both forms evaluate to the same
+    ``sql_literal``. Above it ``col`` is a ``free_name`` staging column
+    attached by a crossJoin with a 1-row broadcast of the value, and it
+    is dropped from ``use``'s result. Both forms evaluate to the same
     bits, so ``use`` sees one value either way."""
     if _leaves(value, dtype) <= _LITERAL_MAX_ELEMS:
         return use(df, F.expr(sql_literal(value, dtype)))
-    taken = {c.lower() for c in df.columns}
-    name = "__folded"
-    while name.lower() in taken:
-        name += "_"
+    name = free_name(df.columns, "__folded")
     row = df.sparkSession.createDataFrame(
         [(value,)], T.StructType([T.StructField(name, dtype)])
     )

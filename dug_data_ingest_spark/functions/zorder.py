@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dug_data_ingest_spark.functions.constants import free_name
+
 
 def normalize_to_bits(
     x: Column, x_min: Column, x_max: Column, bits: int
@@ -86,19 +88,10 @@ def zorder_key_2d(
     and write — each output file then covers a z-range whose min/max
     envelope is tight in BOTH x and y (measured by the
     ``layout-zorder`` query's per-bucket span stats)."""
-    # suffix-until-free staging guard (the gate_documents convention):
-    # an input df already carrying __xmin etc. must not collide
-    def _free(base: str) -> str:
-        name = base
-        while name in df.columns:
-            name += "_"
-        return name
-
+    # free staging names: an input df already carrying __xmin etc.
+    # must not collide
     xmin, xmax, ymin, ymax = (
-        _free("__xmin"),
-        _free("__xmax"),
-        _free("__ymin"),
-        _free("__ymax"),
+        free_name(df.columns, b) for b in ("__xmin", "__xmax", "__ymin", "__ymax")
     )
     stats = df.agg(
         F.min(x_col).alias(xmin),

@@ -37,6 +37,7 @@ from dug_data_ingest_spark.ext.multimodal import (
     synth_image_media,
 )
 from dug_data_ingest_spark.ext.similarity import (
+    _assign,
     cosine_dup_pairs,
     ivf_topk,
     lsh_banded_pairs,
@@ -1074,8 +1075,15 @@ FROM a{n_iters} GROUP BY cluster""")
 @query("sim-kmeans-cells", oracle=_kmeans_oracle(8, 2))
 def sim_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two Lloyd iterations from a deterministic init — the learned
-    coarse quantizer behind IVF; output is the cell population table."""
-    return kmeans_centroids(load(spark, sf_dir, "embeddings"), k=8, n_iters=2)
+    coarse quantizer behind IVF; output is the cell population table
+    of the final assignment."""
+    emb = load(spark, sf_dir, "embeddings")
+    cents = kmeans_centroids(emb, k=8, n_iters=2)
+    return (
+        _assign(emb, cents, "vec_id", "embedding")
+        .groupBy("cluster")
+        .agg(F.count("*").alias("n_members"))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1802,9 +1810,10 @@ def dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 #                   was dropped
 # The inherent cell-boundary recall trade stays visible in the
 # library docstring + test, not hidden by this gate.
-# Scale shape: centroids broadcast (k rows); the one quadratic step
-# is the within-cell pair join, (n/k)^2 per cell; the corpus shuffles
-# only on the cell id.
+# Scale shape: the collected centroids (k rows, one snapshot shared
+# by every property branch) fold into a row-local argmin; the one
+# quadratic step is the within-cell pair join, (n/k)^2 per cell; the
+# corpus shuffles only on the cell id.
 # ---------------------------------------------------------------------------
 
 
@@ -1819,28 +1828,10 @@ def dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dug_data_ingest_spark.ext.similarity import (
-        _assign,
-        cosine_dup_pairs,
-        kmeans_centroids,
-        semantic_dedup,
-    )
+    from dug_data_ingest_spark.ext.similarity import semantic_dedup
 
     emb = load(spark, sf_dir, "embeddings")
-    # ONE learned-cell snapshot shared by every property branch: the
-    # booleans below reference `cents` from ~5 independent plan
-    # branches (semantic_dedup, pairs, left, survivors), and avg()'s
-    # partial-merge order is not guaranteed identical across
-    # recomputations on a cluster — an unmaterialized lineage could
-    # re-train per branch and land a boundary vector in different
-    # cells, spuriously failing partition_ok/no_dup_left/drops_sound.
-    # localCheckpoint truncates the lineage so all branches replay the
-    # same k x dim centroid table (r12 ADVICE; the _kn_tables idiom).
-    cents = (
-        kmeans_centroids(emb, k=8, n_iters=2, with_centroids=True)
-        .select("cluster", "centroid")
-        .localCheckpoint(eager=False)
-    )
+    cents = kmeans_centroids(emb, k=8, n_iters=2)
     survivors, drop = semantic_dedup(emb, threshold=0.4, centroids=cents)
     pairs = cosine_dup_pairs(
         _assign(emb, cents, "vec_id", "embedding"), 0.4, block_col="cluster"

@@ -68,6 +68,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dug_data_ingest_spark.functions.constants import free_name
+
 # 15 hex chars = 60 bits: fits a signed 64-bit int in both engines
 _HASH_HEX_CHARS = 15
 # modular sum keeps the checksum wrap-free in both engines: 2^30-bound
@@ -557,12 +559,10 @@ def delta_sync_write(
                 # join: the key list ships as a real (broadcastable)
                 # relation instead of a million-term predicate the
                 # optimizer would choke parsing. The staging column
-                # name is collision-proofed — overwriting a real
-                # column named __sync_key would silently drop it from
-                # the written data on this path only.
-                stage_col = "__sync_key"
-                while stage_col in staged.columns:
-                    stage_col += "_"
+                # name is a free_name — overwriting a real column
+                # named __sync_key would silently drop it from the
+                # written data on this path only.
+                stage_col = free_name(staged.columns, "__sync_key")
                 keys_df = df.sparkSession.createDataFrame(
                     [(k,) for k in to_write], f"{stage_col} string"
                 )

@@ -81,6 +81,35 @@ def test_broadcast_staging_column_never_collides(spark, monkeypatch):
     assert "BroadcastExchange" in out._jdf.queryExecution().executedPlan().toString()
 
 
+def test_staging_names_skip_caller_columns_in_any_case(spark):
+    # Spark resolves column names case-insensitively, so a staging
+    # column must not reuse a caller's name in another case
+    from dug_data_ingest_spark.ext.curation import perplexity_buckets
+    from dug_data_ingest_spark.ext.dedup import bloom_prefilter_exact
+
+    assert constants.free_name(["id", "__BLOOM", "__bloom_"], "__bloom") == "__bloom__"
+    docs = spark.createDataFrame(
+        [(i, "en", float(i), f"mine{i}") for i in range(6)],
+        "doc_id int, lang string, ppl double, __PPL_CUTS string",
+    )
+    out = perplexity_buckets(docs, "ppl")
+    assert out.columns == docs.columns + ["ppl_bucket"]
+    assert {(r["doc_id"], r["__PPL_CUTS"]) for r in out.collect()} == {
+        (i, f"mine{i}") for i in range(6)
+    }
+
+    hist = spark.createDataFrame([(0, "seen alpha")], "doc_id int, text string")
+    batch = spark.createDataFrame(
+        [(1, "seen alpha", 11), (2, "new beta", 12)],
+        "doc_id int, text string, __BLOOM int",
+    )
+    out = bloom_prefilter_exact(batch, hist, m_bits=64, k_hashes=3)
+    assert out.columns == batch.columns + ["seen_exact"]
+    assert {(r["doc_id"], r["__BLOOM"], r["seen_exact"]) for r in out.collect()} == {
+        (1, 11, True), (2, 12, False)
+    }
+
+
 # --- every gated site, literal path vs forced broadcast path ---------
 
 

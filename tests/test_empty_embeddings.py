@@ -3,7 +3,9 @@ slugs: those that search with the vec_id = 0 query row raise a typed
 ValueError naming that row instead of failing on ``None[0]``; the
 recall gauges match their oracle's (0, 0, NULL) row instead of raising
 a divide-by-zero; and the batch search over an empty query set matches
-its oracle's empty result."""
+its oracle's empty result. The learned-cell slugs fit no centroids
+on an empty corpus and match their oracles too: an empty population
+table, and dedup-semantic's (0, true, true, true) property row."""
 
 from __future__ import annotations
 
@@ -47,3 +49,11 @@ def test_empty_embeddings_multiquery_matches_oracle(spark, empty_dir):
     # no query rows: the folded query set is a typed empty array, not
     # array<void> (whose q.qid extract cannot resolve)
     assert _oracle_rows(spark, empty_dir, "sim-topk-multiquery") == []
+
+
+@pytest.mark.parametrize(
+    "slug, rows",
+    [("sim-kmeans-cells", []), ("dedup-semantic", [(0, True, True, True)])],
+)
+def test_empty_embeddings_learned_cells_match_oracle(spark, empty_dir, slug, rows):
+    assert _oracle_rows(spark, empty_dir, slug) == rows

@@ -30,7 +30,9 @@ JOB_BUDGET = {
     "ccnet-curate": 16,
     "curate-dsir-resample": 4,
     "text-bm25-topk": 4,
-    "dedup-semantic": 56,
+    "dedup-semantic": 42,
+    "sim-kmeans-cells": 7,
+    "sim-ivf-pq-topk": 15,
 }
 
 

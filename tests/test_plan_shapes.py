@@ -143,12 +143,15 @@ def test_flagship_report_no_python_in_hot_path(queries, spark):
     assert "BatchEvalPython" not in plan
 
 
-def test_kmeans_broadcasts_centroids_every_iteration(queries, spark):
-    # the corpus must never shuffle for assignment: every join in the
-    # plan is a broadcast of the k-row centroid table
+def test_kmeans_assigns_row_locally(queries, spark):
+    # the corpus never shuffles for assignment: the collected centroids
+    # fold into a row-local argmin, so the plan has no join, no
+    # exchange on vec_id, and exactly one Exchange (the population
+    # groupBy on the cell id)
     plan = _plan(queries["sim-kmeans-cells"](spark, SF_DIR))
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    assert "Join" not in plan, plan
+    assert "hashpartitioning(vec_id" not in plan, plan
+    assert plan.count("Exchange") == 1, plan
 
 
 # ---------------------------------------------------------------------------

@@ -285,14 +285,17 @@ def test_salted_join_rejects_outer_how(spark):
         salted_join(df, df, "k", salt=4, how="full")
 
 
-def test_kmeans_with_centroids_returns_quantizer_table(spark):
-    from dug_data_ingest_spark.ext.similarity import kmeans_centroids
+def test_kmeans_returns_quantizer_rows(spark):
+    from dug_data_ingest_spark.ext.similarity import _assign, kmeans_centroids
 
     emb = spark.read.parquet(f"{TEST_SF_DIR}/embeddings.parquet")
-    out = kmeans_centroids(emb, k=4, n_iters=1, with_centroids=True)
-    rows = out.collect()
-    assert set(out.columns) == {"cluster", "centroid", "n_members"}
+    rows = kmeans_centroids(emb, k=4, n_iters=1)
+    assert all(set(r.asDict()) == {"cluster", "centroid"} for r in rows)
     assert len(rows) == 4 and all(len(r.centroid) > 0 for r in rows)
+    # every vector lands in one of the returned cells
+    pops = _assign(emb, rows, "vec_id", "embedding").groupBy("cluster").count()
+    assert {r.cluster for r in pops.collect()} <= {r.cluster for r in rows}
+    assert sum(r["count"] for r in pops.collect()) == emb.count()
 
 
 def test_duplicate_clusters_raises_on_nonconvergence(spark):

@@ -70,11 +70,8 @@ def test_semantic_dedup_matches_model_with_explicit_centroids(spark):
     emb = spark.createDataFrame(
         [(i, v) for i, v in vecs.items()], "vec_id bigint, embedding array<double>"
     )
-    cdf = spark.createDataFrame(
-        [(ci, c) for ci, c in enumerate(cents)], "cluster int, centroid array<double>"
-    )
     survivors, drop = semantic_dedup(
-        emb, threshold=threshold, centroids=cdf
+        emb, threshold=threshold, centroids=list(enumerate(cents))
     )
     got_drop = {r["vec_id"] for r in drop.collect()}
     got_surv = {r["vec_id"] for r in survivors.collect()}
@@ -94,10 +91,8 @@ def test_semantic_dedup_cross_cell_pair_is_not_compared(spark):
         [(0, [1.0, 0.9999]), (1, [0.9999, 1.0])],
         "vec_id bigint, embedding array<double>",
     )
-    cdf = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "cluster int, centroid array<double>"
-    )
-    survivors, drop = semantic_dedup(emb, threshold=0.9, centroids=cdf)
+    cents = [(0, [1.0, 0.0]), (1, [0.0, 1.0])]
+    survivors, drop = semantic_dedup(emb, threshold=0.9, centroids=cents)
     assert drop.count() == 0
     assert survivors.count() == 2
 

@@ -10,8 +10,8 @@ build (an inferred isnotnull pushed below one branch's exchange) and
 text-keyword-tfidf's duplicated (doc, token) rollup (column pruning
 stripped one branch's partial count) — both fixed and plan-pinned.
 Every remaining FLAG is justified and documented in SCALE.md lesson
-12: truth-vs-sketch measurement slugs, per-round kmeans scans,
-inherently multi-pass pipelines, and fuzzy-qgram's rarity pass.
+12: truth-vs-sketch measurement slugs, inherently multi-pass
+pipelines, and fuzzy-qgram's rarity pass.
 Re-run after any plan-shaping change; investigate NEW flags.
 """
 
@@ -29,9 +29,8 @@ SF_DIR = "/root/testdata/sf0.001"
 # FLAGs reviewed and justified as of round 7 (see module docstring).
 KNOWN = {
     "events-audience-overlap", "join-fuzzy-qgram", "pipeline-curate-corpus",
-    "pipeline-incremental-dedup", "sim-ivf-recall", "sim-kmeans-cells",
-    "sim-lsh-recall", "sim-lsh-recall-banded", "src-ftp-files",
-    "text-decontaminate",
+    "pipeline-incremental-dedup", "sim-ivf-recall", "sim-lsh-recall",
+    "sim-lsh-recall-banded", "src-ftp-files", "text-decontaminate",
     # r8: 3 scans of documents = the two accepted wins derivations of
     # the count-then-join span design (dedup-substring's "derived
     # twice, by design" — keeps hot-fp skew probe-side) + the base
@@ -55,9 +54,12 @@ KNOWN = {
     # r12: the slug IS a self-audit — it re-runs the within-cell pair
     # scan on the survivors and re-derives the original pair set to
     # prove partition/completeness/soundness, so embeddings is read
-    # once per property check by design. The production operator
-    # (ext/similarity.py::semantic_dedup alone) scans the corpus once
-    # per k-means iteration plus once for the pair join.
+    # once per property check by design (6 scans in the final plan:
+    # every branch re-derives its cells with a row-local argmin over
+    # the folded centroids instead of reading a centroid snapshot).
+    # The production operator (ext/similarity.py::semantic_dedup
+    # alone) scans the corpus once per k-means round while the frame
+    # is built, then in the pair join and the survivor anti-join.
     "dedup-semantic",
     # r13: documents x3 = the composed CCNet arc inherits its stages'
     # accepted anatomies — dedup-paragraph's build/probe double
