@@ -285,13 +285,47 @@ def best_prior(prior: list, timings: dict, sf_val, cpus: int, cur_calib):
     return best
 
 
+def calib(spark) -> dict[str, float]:
+    """Machine-speed calibration anchor: the shared host's per-core
+    throughput drifts 1.3-1.6x BETWEEN runs under external tenant load
+    (SCALE.md "Bench posture" — measured 56.8s vs 88.1s totals for
+    identical code 30 min apart), so absolute totals compare machine
+    states, not plans. Timing a fixed synthetic workload — one
+    JVM-side Spark reduction and one numpy matmul, both
+    code-independent — alongside the queries lets any cross-round
+    reader normalize: query_total / calib ratios travel; raw seconds
+    do not. Medians of three reps."""
+    import numpy as np
+
+    spark_times, np_times = [], []
+    for _ in range(3):
+        t0 = time.perf_counter()
+        spark.range(100_000_000).selectExpr(
+            "sum(id * 2654435761 % 1000000007)"
+        ).collect()
+        spark_times.append(time.perf_counter() - t0)
+        a = np.random.default_rng(42).random((1024, 1024))
+        t0 = time.perf_counter()
+        for _ in range(4):
+            a = a @ a % 1.0
+        np_times.append(time.perf_counter() - t0)
+    return {
+        "calib_spark_sec": round(sorted(spark_times)[1], 3),
+        "calib_numpy_sec": round(sorted(np_times)[1], 3),
+    }
+
+
+def sf_value(sf_dir: str) -> float | None:
+    """The scale factor an ``.../sf<N>`` directory names, else None."""
+    try:
+        return float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
+    except ValueError:
+        return None
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    try:
-        sf_val = float(sf)
-    except ValueError:
-        sf_val = None
+    sf_val = sf_value(sf_dir)
     spark = get_spark("dug-data-ingest-spark-bench")
     queries = all_queries()
     names = [n for n in HEADLINE if n in queries]
@@ -345,42 +379,13 @@ def main() -> None:
         elif times:
             partial[name] = len(times)
 
-    # Machine-speed calibration anchor: the shared host's per-core
-    # throughput drifts 1.3-1.6x BETWEEN runs under external tenant
-    # load (SCALE.md "Bench posture" — measured 56.8s vs 88.1s totals
-    # for identical code 30 min apart), so absolute totals compare
-    # machine states, not plans. Timing a fixed synthetic workload —
-    # one JVM-side Spark reduction and one numpy matmul, both
-    # code-independent — alongside the queries lets any cross-round
-    # reader normalize: query_total / calib ratios travel; raw
-    # seconds do not.
-    def _calib() -> dict[str, float]:
-        import numpy as np
-
-        spark_times, np_times = [], []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            spark.range(100_000_000).selectExpr(
-                "sum(id * 2654435761 % 1000000007)"
-            ).collect()
-            spark_times.append(time.perf_counter() - t0)
-            a = np.random.default_rng(42).random((1024, 1024))
-            t0 = time.perf_counter()
-            for _ in range(4):
-                a = a @ a % 1.0
-            np_times.append(time.perf_counter() - t0)
-        return {
-            "calib_spark_sec": round(sorted(spark_times)[1], 3),
-            "calib_numpy_sec": round(sorted(np_times)[1], 3),
-        }
-
     result = {
         "metric": "headline_queries_total",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": sf_val,
-        **_calib(),
+        **calib(spark),
     }
     result.update(noisy_host_flags(result))
     if errors:

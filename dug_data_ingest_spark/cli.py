@@ -140,11 +140,10 @@ def run_dedup(spark: SparkSession, args) -> None:
 
     Strategies compose the ext.dedup stages: ``exact`` keeps one doc
     per content hash (null texts form one group, so exactly one
-    null-text doc survives); ``jaccard`` clusters shared-shingle
-    candidates at --threshold with the --max-doc-freq hot-shingle
-    cap, or — with --exact-jaccard — the PPJoin prefix path
-    (ngram_jaccard_pairs_prefix): EXACT Jaccard semantics, no cap, the
-    hot-shingle blowup structurally prevented, the same path the
+    null-text doc survives); ``jaccard`` clusters the pairs at
+    --threshold from the PPJoin prefix path
+    (ngram_jaccard_pairs_prefix): EXACT Jaccard semantics, no df cap,
+    the hot-shingle blowup structurally prevented, the same path the
     graded dedup family runs; ``minhash`` blocks via banded LSH and
     thresholds the
     signature-only Jaccard estimate — no shingle-level verify, so its
@@ -158,16 +157,15 @@ def run_dedup(spark: SparkSession, args) -> None:
     (AQE broadcasts it when small): unlike the fixed-threshold
     dedup-survivors query, a permissive --threshold can make the
     drop set a large corpus fraction."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from dug_data_ingest_spark.ext.dedup import (
         doc_shingles,
+        exact_dedup_survivors,
         minhash_band_keys,
         minhash_candidate_pairs,
         minhash_jaccard_estimates,
         minhash_signatures_wide,
-        ngram_jaccard_pairs,
         ngram_jaccard_pairs_prefix,
         non_canonical_ids,
     )
@@ -175,15 +173,7 @@ def run_dedup(spark: SparkSession, args) -> None:
 
     docs = _read(spark, args.documents, args.csv)
     if args.strategy == "exact":
-        # window over the content hash, NOT a join on it: an equi-join
-        # drops NULL keys, silently deleting every null-text doc;
-        # window partitions group NULLs together so one survives
-        w = Window.partitionBy(F.md5(F.col("text")))
-        survivors = (
-            docs.withColumn("_canon", F.min("doc_id").over(w))
-            .filter(F.col("doc_id") == F.col("_canon"))
-            .drop("_canon")
-        )
+        survivors = exact_dedup_survivors(docs)
         n_dropped = None  # derived from counts below
     elif args.strategy == "substring":
         # span-level verbatim dedup: docs are REWRITTEN, not dropped —
@@ -212,14 +202,7 @@ def run_dedup(spark: SparkSession, args) -> None:
         n_dropped = None
     else:
         if args.strategy == "jaccard":
-            if getattr(args, "exact_jaccard", False):
-                pairs = ngram_jaccard_pairs_prefix(
-                    docs, threshold=args.threshold
-                )
-            else:
-                pairs = ngram_jaccard_pairs(
-                    docs, threshold=args.threshold, max_doc_freq=args.max_doc_freq
-                )
+            pairs = ngram_jaccard_pairs_prefix(docs, threshold=args.threshold)
         else:  # minhash
             sig = minhash_signatures_wide(doc_shingles(docs))
             cand = minhash_candidate_pairs(minhash_band_keys(sig))
@@ -250,7 +233,6 @@ def run_curate(spark: SparkSession, args) -> None:
     when not given) → token-count quality gate → reproducible
     md5-bucket sample; --pack additionally packs the curated docs
     into --cap-token chunks per source."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from dug_data_ingest_spark.ext.curation import (
@@ -259,15 +241,11 @@ def run_curate(spark: SparkSession, args) -> None:
         pack_sequences,
         with_token_counts,
     )
+    from dug_data_ingest_spark.ext.dedup import exact_dedup_survivors
     from dug_data_ingest_spark.sources.files import write_csv
 
     docs = _read(spark, args.documents, args.csv)
-    w = Window.partitionBy(F.md5(F.col("text")))
-    deduped = (
-        docs.withColumn("_canon", F.min("doc_id").over(w))
-        .filter(F.col("doc_id") == F.col("_canon"))
-        .drop("_canon")
-    )
+    deduped = exact_dedup_survivors(docs)
     if args.eval_docs:
         deduped = decontaminate(deduped, _read(spark, args.eval_docs, args.csv))
     good = with_token_counts(deduped).filter(F.col("n_tok") >= args.min_tokens)
@@ -315,14 +293,6 @@ def main(argv: list[str] | None = None) -> None:
         default="exact",
     )
     dedup.add_argument("--threshold", type=float, default=0.8)
-    dedup.add_argument("--max-doc-freq", type=int, default=1000, dest="max_doc_freq")
-    dedup.add_argument(
-        "--exact-jaccard", action="store_true", dest="exact_jaccard",
-        help="jaccard strategy: PPJoin prefix-filtered EXACT Jaccard "
-        "(no df cap, hot-shingle blowup structurally prevented) "
-        "instead of the df-capped shared-shingle join; --max-doc-freq "
-        "is ignored",
-    )
     dedup.add_argument(
         "--span-tokens", type=int, default=8, dest="span_tokens",
         help="substring strategy: window width in tokens",

@@ -100,6 +100,22 @@ def exact_dedup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "d
     )
 
 
+def exact_dedup_survivors(
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """``docs`` minus exact duplicates: the min ``id_col`` per
+    md5(``text_col``) survives, every column kept. A window over the
+    content hash, NOT a join on it: an equi-join drops NULL keys,
+    silently deleting every null-text doc, while a window partition
+    groups the NULLs together so one of them survives."""
+    w = Window.partitionBy(F.md5(F.col(text_col)))
+    return (
+        docs.withColumn("_canon", F.min(id_col).over(w))
+        .filter(F.col(id_col) == F.col("_canon"))
+        .drop("_canon")
+    )
+
+
 def _md5_hash64(col: Column) -> Column:
     """Deterministic 60-bit integer hash from an md5 hex prefix —
     reproducible in any engine with md5 + hex parsing."""
@@ -278,7 +294,7 @@ def minhash_jaccard_estimates(
 
 
 # One-time runtime signal that the default df-cap ACTUALLY dropped
-# shingles (capped Jaccard != exact Jaccard on this corpus). Armed once
+# shingles (capped similarity != exact similarity on this corpus). Armed once
 # per process so only a single CollectMetrics listener ever registers.
 _cap_signal_lock = threading.Lock()
 _cap_signal_armed = False
@@ -286,10 +302,10 @@ _last_cap_observation = None  # exposed for deterministic tests
 
 
 def _arm_cap_signal(
-    hot: DataFrame, cap: int, caller: str = "ngram_jaccard_pairs"
+    hot: DataFrame, cap: int, caller: str = "ngram_containment_pairs"
 ) -> DataFrame:
     """Attach an Observation to the hot-shingle frame so the FIRST
-    executed capped-Jaccard plan reports how many shingles the df-cap
+    executed capped-shingle plan reports how many shingles the df-cap
     removed — a zero-extra-job runtime signal (CollectMetrics rides the
     existing plan) for callers relying on exact semantics. Best-effort:
     if the plan is never executed, no warning fires; later plans in the
@@ -338,17 +354,24 @@ def capped_shingles_with_sizes(
     id_col: str = "doc_id",
     k: int = 3,
     max_doc_freq: int | None = 1000,
-    caller: str = "ngram_jaccard_pairs",
+    caller: str = "ngram_containment_pairs",
 ) -> DataFrame:
     """(id, shingle, n): each document's distinct shingles with
     shingles in more than ``max_doc_freq`` documents removed first and
     ``n`` = the post-cap set size riding every row.
 
-    The single candidate-generation block behind ngram_jaccard_pairs,
-    ngram_containment_pairs, and the incremental-ingest dedup — the
-    df cap's scale argument lives on ngram_jaccard_pairs. The hot list
-    is tiny, so it broadcasts and the corpus-side filter is
-    shuffle-free; ``caller`` labels the one-time cap warning."""
+    The single candidate-generation block behind
+    ngram_containment_pairs and the incremental-ingest dedup. Without
+    the cap, one ubiquitous shingle shared by m documents creates an
+    m² bucket in the shared-shingle join that follows. A shingle in
+    >cap docs carries no discriminating signal anyway (its
+    contribution to any pair's score is ≤ 1/n for all but tiny sets),
+    so the cap changes candidate generation from O(Σ df²) unbounded
+    to O(n · cap); similarity is then over the capped sets on both
+    sides. The hot list is tiny, so it broadcasts and the corpus-side
+    filter is shuffle-free; the cap costs one map-side-combined
+    groupBy plus one doc-keyed window for the post-cap set sizes.
+    ``caller`` labels the one-time cap warning."""
     sh = doc_shingles(docs, text_col, id_col, k)
     if max_doc_freq is not None:
         hot = (
@@ -368,64 +391,30 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 3,
-    max_doc_freq: int | None = 1000,
 ) -> DataFrame:
-    """Exact Jaccard over shingle sets for candidate pairs that share
-    at least one shingle: (a, b, jaccard ≥ threshold).
+    """Exact Jaccard over shingle sets for every pair that shares at
+    least one shingle: (a, b, jaccard ≥ threshold), a < b.
 
-    ``max_doc_freq`` drops shingles appearing in more than that many
-    documents BEFORE the self-join (Jaccard is then over the filtered
-    sets on both sides, so values can differ from the uncapped exact
-    Jaccard). The cap defaults ON (1000) because the bare call must be
-    scale-safe; pass ``max_doc_freq=None`` to explicitly opt in to the
-    uncapped exact semantics on corpora known to have no ubiquitous
-    shingle. Without the cap, one ubiquitous shingle shared by
-    m documents creates an m² join bucket — the classic shared-token
-    blowup: at 100 TB a single stop-word shingle in 10⁶ docs is a
-    10¹²-row bucket. A shingle in >cap docs carries no discriminating
-    signal anyway (its contribution to any pair's Jaccard is ≤ 1/n
-    for all but tiny sets), so the cap changes candidate generation
-    from O(Σ df²) unbounded to O(n · cap). The hot list itself is
-    tiny (few shingles exceed any sane cap), so it broadcasts and the
-    corpus-side filter is shuffle-free; the cap costs one map-side-
-    combined groupBy over the shingle frame plus one doc-keyed window
-    for the post-filter set sizes.
+    The reference shared-shingle join, kept as the literal definition
+    that ``ngram_jaccard_pairs_prefix`` is tested against (the way
+    ``topk_bruteforce`` stays beside the ANN paths). Production
+    callers use ``ngram_jaccard_pairs_prefix``: same output, but one
+    ubiquitous shingle shared by m documents makes an m² join bucket
+    here — at 100 TB a single stop-word shingle in 10⁶ docs is a
+    10¹²-row bucket — while the prefix join never lets it form.
 
-    For even tighter blocking at scale, pre-bucket by minhash band and
-    run this as the verify stage (compose with
-    minhash_candidate_pairs) — or use ``ngram_jaccard_pairs_prefix``,
-    which keeps EXACT semantics while structurally preventing the
-    hot-shingle blowup (measured faster than this path at 10x volume;
-    the graded symmetric family switched onto it in r10 — this capped
-    path remains the containment / batch×corpus incremental shape).
-
+    Set size rides along with every exploded shingle row, so there is
+    no separate per-doc size aggregation and no post-join enrichment
+    join; the two join sides are the identical subplan, which the
+    physical planner collapses into one computed + one ReusedExchange.
     Between the join and the pair aggregation sits the PPJoin-style
-    length filter: J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|), so any pair
-    whose set sizes differ by more than the threshold ratio is dropped
-    BEFORE the (a, b) groupBy — the candidate shuffle shrinks by
-    whatever fraction of shared-shingle pairs have mismatched sizes
-    (63% on the sf0.1 corpus; more on real corpora, where shared
-    boilerplate spans wildly different document lengths) and the
-    result is provably unchanged. The ratio uses a 1e-4 slack because
-    the emitted jaccard is ROUND(·, 4): a true value just under the
-    threshold can round up to it, so the prune keys on what the final
-    filter accepts, not the raw threshold.
+    length filter of ``jaccard_scored_pairs``.
     """
-    if max_doc_freq is None:
-        # Set size rides along with every exploded shingle row, so no
-        # separate per-doc size aggregation and no post-join
-        # enrichment joins; the two join sides are the identical
-        # subplan, which the physical planner collapses into one
-        # computed + one ReusedExchange.
-        ex = doc_shingle_sets(docs, text_col, id_col, k).select(
-            F.col(id_col),
-            F.size("sh").alias("n"),
-            F.explode_outer("sh").alias("shingle"),
-        ).filter(F.col("shingle").isNotNull())
-    else:
-        ex = capped_shingles_with_sizes(
-            docs, text_col, id_col, k, max_doc_freq
-        )
+    ex = doc_shingle_sets(docs, text_col, id_col, k).select(
+        F.col(id_col),
+        F.size("sh").alias("n"),
+        F.explode_outer("sh").alias("shingle"),
+    ).filter(F.col("shingle").isNotNull())
     a = ex.select(F.col(id_col).alias("a"), F.col("n").alias("na"), "shingle")
     b = ex.select(F.col(id_col).alias("b"), F.col("n").alias("nb"), "shingle")
     return jaccard_scored_pairs(
@@ -451,7 +440,15 @@ def jaccard_scored_pairs(
     Expects ``a`` with columns (``left``, na, shingle) and ``b`` with
     (``right``, nb, shingle) — the set sizes riding the exploded rows,
     as capped_shingles_with_sizes produces. Returns
-    (``left``, ``right``, jaccard)."""
+    (``left``, ``right``, jaccard).
+
+    The length prune is PPJoin's J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|):
+    a pair whose set sizes differ by more than the threshold ratio is
+    dropped BEFORE the (a, b) groupBy, so the candidate shuffle
+    shrinks (63% of shared-shingle pairs on the sf0.1 corpus) and the
+    result is provably unchanged. The ratio uses a 1e-4 slack because
+    the emitted jaccard is ROUND(·, 4): a true value just under the
+    threshold can round up to it."""
     j = a.join(b, "shingle")
     if pair_filter is not None:
         j = j.filter(pair_filter)
@@ -483,7 +480,7 @@ def ngram_jaccard_pairs_prefix(
     high-threshold scale path that needs neither the df cap's semantic
     change nor a join on every shared shingle.
 
-    Same output contract as ``ngram_jaccard_pairs(max_doc_freq=None)``
+    Same output contract as ``ngram_jaccard_pairs``
     (every (a, b, ROUND(jaccard, 4) >= threshold) pair, a < b), but
     candidate generation joins only each document's PREFIX — its
     ``n - ceil(t*n) + 1`` globally RAREST shingles under the total
@@ -899,14 +896,14 @@ def ngram_containment_pairs(
     boilerplate-wrapping near-dups — dedup policy typically drops the
     CONTAINED side (a) and keeps the superset (b).
 
-    Candidate generation, the df cap, and the scale argument are
-    exactly ``ngram_jaccard_pairs``: one shared-shingle equi-join,
-    hot shingles (> max_doc_freq docs) broadcast-anti-joined away
-    first, set sizes riding the exploded rows — including the
-    uncapped fast path (``max_doc_freq=None`` computes ``n``
-    row-locally from the pre-explode set, no doc-keyed window
-    shuffle). The only differences are the a ≠ b filter (both
-    directions are meaningful) and the |Sa| denominator.
+    Candidate generation is ``ngram_jaccard_pairs``' shared-shingle
+    equi-join with hot shingles (> max_doc_freq docs) broadcast-anti-
+    joined away first (capped_shingles_with_sizes holds the scale
+    argument), set sizes riding the exploded rows. The uncapped path
+    (``max_doc_freq=None``) computes ``n`` row-locally from the
+    pre-explode set, with no doc-keyed window shuffle. The only
+    differences from Jaccard are the a ≠ b filter (both directions
+    are meaningful) and the |Sa| denominator.
 
     The directional analogue of ngram_jaccard_pairs' length filter
     applies between the join and the pair aggregation: the
@@ -1795,8 +1792,8 @@ def winnow_candidate_pairs(
     pairs come only from shared fingerprints (never a cross product),
     and fingerprints in more than ``max_doc_freq`` documents are
     dropped BOTH sides first — boilerplate every page shares would
-    otherwise form an m²-row join bucket (the ngram_jaccard_pairs df
-    cap, same tiny broadcast anti-join, same armed warning). The
+    otherwise form an m²-row join bucket (the capped_shingles_with_sizes
+    df cap, same tiny broadcast anti-join, same armed warning). The
     self-join's two sides derive from one pipeline, so AQE reuses the
     exchange (the dedup-ngram-jaccard plan property).
     """

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from dug_data_ingest_spark.ext.dedup import (
     _md5_hash64,
     capped_shingles_with_sizes,
+    exact_dedup_survivors,
     jaccard_scored_pairs,
 )
 from dug_data_ingest_spark.ext.curation import (
@@ -228,13 +229,7 @@ def pipeline_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     is_eval = F.col("doc_id") % 10 == 7
     train, eval_docs = docs.filter(~is_eval), docs.filter(is_eval)
-    w = Window.partitionBy(F.md5(F.col("text")))
-    deduped = (
-        train.withColumn("_canon", F.min("doc_id").over(w))
-        .filter(F.col("doc_id") == F.col("_canon"))
-        .drop("_canon")
-    )
-    clean = decontaminate(deduped, eval_docs, k=5)
+    clean = decontaminate(exact_dedup_survivors(train), eval_docs, k=5)
     good = with_token_counts(clean).filter(F.col("n_tok") >= 20)
     return hash_sample(good, pct=50).select("doc_id", "source", "n_tok", "bucket")
 

@@ -46,7 +46,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from dug_data_ingest_spark.sources.xml_dbgap import VARIABLE_SCHEMA
+from dug_data_ingest_spark.sources.xml_dbgap import VARIABLE_SCHEMA, variable_rows
 
 
 class XmlFilesPartition(InputPartition):
@@ -127,23 +127,7 @@ def _parse_xml_file(path: str, strict: bool = False):
             if strict:
                 raise
             return  # quarantine-not-abort, as in xml_dbgap.parse
-    study_id = root.get("study_id")
-    dd_id = root.get("id")
-    for var in root.findall("variable"):
-        fields = {}
-        for tag in ("name", "description", "type"):
-            el = var.find(tag)
-            fields[tag] = el.text if el is not None else None
-        vals = [(v.get("code"), v.text) for v in var.findall("value")]
-        yield (
-            study_id,
-            dd_id,
-            var.get("id"),
-            fields["name"],
-            fields["description"],
-            fields["type"],
-            vals or None,
-        )
+    yield from variable_rows(root)
 
 
 class DbGapXmlStreamReader(SimpleDataSourceStreamReader):
@@ -273,7 +257,7 @@ class DbGapXmlWriter(DataSourceWriter):
         for (study_id, dd_id), rows in groups.items():
             pdf = pd.DataFrame(
                 rows, columns=["var_id", "name", "description", "type", "values"]
-            ).sort_values(["var_id", "name"], kind="mergesort")
+            )
             xml = _render_one(study_id, dd_id, pdf)
             # study/dd in the name enables read-side pruning; the
             # partition suffix keeps concurrent tasks collision-free

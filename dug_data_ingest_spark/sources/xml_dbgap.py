@@ -89,11 +89,17 @@ XML_DOC_SCHEMA = T.StructType(
 )
 
 
+_FIELD_TAGS = ("name", "description", "type")
+
+
 def _render_one(study_id: str, dd_id: str, group: pd.DataFrame) -> str:
+    """One ``<data_table>`` document, variables ordered by (var_id,
+    name) with a stable sort so the bytes never depend on row order."""
     root = ET.Element("data_table", attrib={"id": dd_id or "", "study_id": study_id or ""})
+    group = group.sort_values(["var_id", "name"], kind="mergesort")
     for row in group.itertuples(index=False):
         var = ET.SubElement(root, "variable", attrib={"id": row.var_id or ""})
-        for tag in ("name", "description", "type"):
+        for tag in _FIELD_TAGS:
             val = getattr(row, tag)
             if val is not None and not (isinstance(val, float) and pd.isna(val)):
                 ET.SubElement(var, tag).text = str(val)
@@ -107,13 +113,26 @@ def _render_one(study_id: str, dd_id: str, group: pd.DataFrame) -> str:
     return ET.tostring(root, encoding="unicode")
 
 
+def variable_rows(root: ET.Element) -> Iterator[tuple]:
+    """The variables of one parsed ``<data_table>`` as tuples in
+    VARIABLE_SCHEMA order — the one walk behind both parse_data_tables
+    and the ``dbgap_xml`` data source. Unknown child tags are ignored,
+    missing children become null, and a variable without ``<value>``
+    children gets NULL values."""
+    study_id = root.get("study_id")
+    dd_id = root.get("id")
+    for var in root.findall("variable"):
+        fields = [None if el is None else el.text for el in map(var.find, _FIELD_TAGS)]
+        vals = [{"code": v.get("code"), "label": v.text} for v in var.findall("value")]
+        yield (study_id, dd_id, var.get("id"), *fields, vals or None)
+
+
 def render_data_tables(variables: DataFrame) -> DataFrame:
     """variables (VARIABLE_SCHEMA rows) → one XML doc per
     (study_id, dd_id), deterministically ordered by var_id."""
 
     def render(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         study_id, dd_id = key
-        pdf = pdf.sort_values(["var_id", "name"], kind="mergesort")
         return pd.DataFrame(
             {"study_id": [study_id], "dd_id": [dd_id], "xml": [_render_one(study_id, dd_id, pdf)]}
         )
@@ -140,34 +159,23 @@ def parse_data_tables(docs: DataFrame) -> DataFrame:
     arrays to NULL, tested in tests/test_xml_roundtrip.py.
     """
 
+    names = VARIABLE_SCHEMA.fieldNames()
+
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
-            out = {k: [] for k in ("study_id", "dd_id", "var_id", "name", "description", "type", "values")}
-            dropped = []
+            rows, dropped = [], []
             for row in batch.itertuples(index=False):
                 root = _parse_doc(row.xml)
                 if root is None:
                     dropped.append(row.dd_id)
                     continue
-                study_id = root.get("study_id")
-                dd_id = root.get("id")
-                for var in root.findall("variable"):
-                    out["study_id"].append(study_id)
-                    out["dd_id"].append(dd_id)
-                    out["var_id"].append(var.get("id"))
-                    for tag in ("name", "description", "type"):
-                        el = var.find(tag)
-                        out[tag].append(el.text if el is not None else None)
-                    vals = [
-                        {"code": v.get("code"), "label": v.text}
-                        for v in var.findall("value")
-                    ]
-                    out["values"].append(vals if vals else None)
+                rows.extend(variable_rows(root))
             _log_dropped("parse_data_tables", dropped)
+            cols = list(zip(*rows)) or [()] * len(names)
             # object dtype so empty batches still carry the right
             # Arrow type for the nested values column
             yield pd.DataFrame(
-                {k: pd.Series(v, dtype="object") for k, v in out.items()}
+                {k: pd.Series(list(v), dtype="object") for k, v in zip(names, cols)}
             )
 
     # no fan_out here: parse_data_tables sits mid-chain behind the

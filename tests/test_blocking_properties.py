@@ -255,7 +255,7 @@ _doc = st.text(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 def test_uncapped_jaccard_matches_set_model(spark, texts):
-    """ngram_jaccard_pairs with max_doc_freq=None must equal the
+    """ngram_jaccard_pairs must equal the
     literal set definition — every pair sharing >= 1 shingle, Jaccard
     = |∩|/|∪| rounded to 4dp, threshold 0 so nothing hides — on
     adversarial tiny documents (empty, below-k, punctuation-only,
@@ -269,7 +269,7 @@ def test_uncapped_jaccard_matches_set_model(spark, texts):
     )
     got = {
         (r.a, r.b): r.jaccard
-        for r in ngram_jaccard_pairs(df, threshold=0.0, max_doc_freq=None).collect()
+        for r in ngram_jaccard_pairs(df, threshold=0.0).collect()
     }
     sets = {i: _model_shingles(t) for i, t in enumerate(texts)}
     want = {}
@@ -310,9 +310,7 @@ def test_prefix_jaccard_equals_uncapped_exact(spark, texts, threshold):
     df = spark.createDataFrame(list(enumerate(texts)), "doc_id int, text string")
     want = {
         (r.a, r.b): r.jaccard
-        for r in ngram_jaccard_pairs(
-            df, threshold=threshold, max_doc_freq=None
-        ).collect()
+        for r in ngram_jaccard_pairs(df, threshold=threshold).collect()
     }
     got = {
         (r.a, r.b): r.jaccard

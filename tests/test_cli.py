@@ -97,7 +97,7 @@ def test_cli_dedup_exact_and_jaccard(spark, tmp_path):
 
     class A:
         documents, csv = docs_p, False
-        strategy, threshold, max_doc_freq = "exact", 0.8, 1000
+        strategy, threshold = "exact", 0.8
         out = str(tmp_path / "exact")
 
     run_dedup(spark, A)
@@ -117,18 +117,18 @@ def test_cli_dedup_exact_and_jaccard(spark, tmp_path):
     jac = spark.read.parquet(f"{B.out}/survivors")
     # near-dedup drops at least the exact dups, usually more
     assert jac.count() <= surv.count()
+    # the prefix path keeps exactly the survivors of the literal
+    # shared-shingle join's clusters
+    from dug_data_ingest_spark.ext.dedup import (
+        ngram_jaccard_pairs,
+        non_canonical_ids,
+    )
 
-    class C(B):
-        exact_jaccard = True
-        out = str(tmp_path / "jac_exact")
-
-    run_dedup(spark, C)
-    jac_exact = spark.read.parquet(f"{C.out}/survivors")
-    # the sf0.001 corpus has no shingle over the df cap, so the capped
-    # and exact paths must agree on the survivor SET here — the same
-    # equivalence the prefix-switch oracle parity pins at sf0.01
-    assert sorted(r.doc_id for r in jac_exact.select("doc_id").collect()) == sorted(
-        r.doc_id for r in jac.select("doc_id").collect()
+    docs = spark.read.parquet(docs_p)
+    drop = non_canonical_ids(ngram_jaccard_pairs(docs, threshold=0.8))
+    want = docs.join(drop, "doc_id", "left_anti")
+    assert sorted(r.doc_id for r in jac.select("doc_id").collect()) == sorted(
+        r.doc_id for r in want.select("doc_id").collect()
     )
 
 
@@ -138,7 +138,7 @@ def test_cli_dedup_minhash_estimate_path(spark, tmp_path):
 
     class A:
         documents, csv = f"{TEST_SF_DIR}/documents.parquet", False
-        strategy, threshold, max_doc_freq = "minhash", 0.5, 1000
+        strategy, threshold = "minhash", 0.5
         out = str(tmp_path / "mh")
 
     run_dedup(spark, A)
@@ -160,7 +160,7 @@ def test_cli_dedup_exact_keeps_one_null_text_doc(spark, tmp_path):
 
     class A:
         documents, csv = docs_p, False
-        strategy, threshold, max_doc_freq = "exact", 0.8, 1000
+        strategy, threshold = "exact", 0.8
         out = str(tmp_path / "out")
 
     run_dedup(spark, A)
@@ -187,7 +187,7 @@ def test_cli_dedup_substring_passes_null_text_through(spark, tmp_path):
 
     class A:
         documents, csv = docs_p, False
-        strategy, threshold, max_doc_freq = "substring", 0.8, 1000
+        strategy, threshold = "substring", 0.8
         span_tokens = 4
         out = str(tmp_path / "out")
 
@@ -258,7 +258,7 @@ def test_cli_dedup_substring_rewrites_docs(spark, tmp_path):
 
     class A:
         documents, csv = docs_p, False
-        strategy, threshold, max_doc_freq = "substring", 0.8, 1000
+        strategy, threshold = "substring", 0.8
         span_tokens = 8
         out = str(tmp_path / "sub")
 

@@ -133,29 +133,31 @@ def test_dynamic_partition_pruning_from_dim_filter(spark, partitioned_lineitem):
 
 
 # ---------------------------------------------------------------------------
-# ngram-Jaccard shingle document-frequency cap (ext/dedup.py)
+# shingle document-frequency cap of the shared-shingle joins (ext/dedup.py:
+# capped_shingles_with_sizes, behind ngram_containment_pairs and the
+# incremental Jaccard dedup)
 # ---------------------------------------------------------------------------
 
 
 def test_jaccard_df_cap_kills_hot_shingle_blowup(spark):
     # n docs all sharing ONE ubiquitous shingle ("the quick fox") plus
     # per-doc unique shingles. Uncapped, the shared shingle alone
-    # creates C(n,2) candidate pairs — the m²-per-hot-shingle blowup
-    # that at 100 TB makes a stop-word shingle a 10^12-row join
+    # creates n(n-1) ordered candidate pairs — the m²-per-hot-shingle
+    # blowup that at 100 TB makes a stop-word shingle a 10^12-row join
     # bucket. With df cap < n the shingle is dropped from both sides
     # and candidate generation is bounded by O(n * cap).
-    from dug_data_ingest_spark.ext.dedup import ngram_jaccard_pairs
+    from dug_data_ingest_spark.ext.dedup import ngram_containment_pairs
 
     n = 40
     docs = spark.createDataFrame(
         [(i, f"the quick fox w{i}a w{i}b w{i}c") for i in range(n)],
         ["doc_id", "text"],
     )
-    uncapped = ngram_jaccard_pairs(
+    uncapped = ngram_containment_pairs(
         docs, threshold=0.0, max_doc_freq=None
     ).count()
-    capped = ngram_jaccard_pairs(docs, threshold=0.0, max_doc_freq=5).count()
-    assert uncapped == n * (n - 1) // 2  # the quadratic bucket, live
+    capped = ngram_containment_pairs(docs, threshold=0.0, max_doc_freq=5).count()
+    assert uncapped == n * (n - 1)  # the quadratic bucket, live
     assert capped == 0  # hot shingle dropped -> no candidates
 
 
@@ -164,14 +166,14 @@ def test_jaccard_df_cap_defaults_on(spark):
     # value (uncapped is an explicit max_doc_freq=None opt-out), and a
     # default-args call over a corpus whose hot shingle exceeds that
     # default behaves as capped — the ubiquitous shingle is dropped,
-    # not joined m². (Uncapped, this corpus would emit C(n,2) > 5*10^5
+    # not joined m². (Uncapped, this corpus would emit n(n-1) > 10^6
     # pairs; capped it emits none, so the assertion distinguishes the
     # paths decisively.)
     import inspect
 
-    from dug_data_ingest_spark.ext.dedup import ngram_jaccard_pairs
+    from dug_data_ingest_spark.ext.dedup import ngram_containment_pairs
 
-    default = inspect.signature(ngram_jaccard_pairs).parameters[
+    default = inspect.signature(ngram_containment_pairs).parameters[
         "max_doc_freq"
     ].default
     assert isinstance(default, int) and default > 0
@@ -181,7 +183,7 @@ def test_jaccard_df_cap_defaults_on(spark):
         [(i, f"the quick fox w{i}a w{i}b w{i}c") for i in range(n)],
         ["doc_id", "text"],
     )
-    assert ngram_jaccard_pairs(docs, threshold=0.0).count() == 0
+    assert ngram_containment_pairs(docs, threshold=0.0).count() == 0
 
 
 def test_jaccard_df_cap_emits_runtime_signal(spark, caplog):
@@ -206,7 +208,7 @@ def test_jaccard_df_cap_emits_runtime_signal(spark, caplog):
     with caplog.at_level(
         logging.WARNING, logger="dug_data_ingest_spark.ext.dedup"
     ):
-        dd.ngram_jaccard_pairs(docs, threshold=0.0, max_doc_freq=5).count()
+        dd.ngram_containment_pairs(docs, threshold=0.0, max_doc_freq=5).count()
         obs = dd._last_cap_observation
         assert obs is not None
         assert obs.get["n_hot"] > 0  # blocks until metrics land
@@ -223,16 +225,16 @@ def test_jaccard_df_cap_emits_runtime_signal(spark, caplog):
 
 def test_jaccard_df_cap_is_noop_below_cap(spark):
     # When no shingle exceeds the cap the capped and uncapped paths
-    # must produce identical pairs AND identical jaccard values (the
+    # must produce identical pairs AND identical values (the
     # post-filter set sizes equal the raw set sizes).
-    from dug_data_ingest_spark.ext.dedup import ngram_jaccard_pairs
+    from dug_data_ingest_spark.ext.dedup import ngram_containment_pairs
 
     docs = spark.read.parquet(f"{TEST_SF_DIR}/documents.parquet")
     plain = sorted(
-        map(tuple, ngram_jaccard_pairs(docs, 0.8, max_doc_freq=None).collect())
+        map(tuple, ngram_containment_pairs(docs, 0.8, max_doc_freq=None).collect())
     )
     capped = sorted(
-        map(tuple, ngram_jaccard_pairs(docs, 0.8, max_doc_freq=100).collect())
+        map(tuple, ngram_containment_pairs(docs, 0.8, max_doc_freq=100).collect())
     )
     assert plain == capped and len(plain) > 0
 

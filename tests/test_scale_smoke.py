@@ -33,8 +33,8 @@ def test_disjoint_inflation_scales_dedup_outputs_exactly_k_times(spark):
     # structure under its own tag, so group count scales exactly K
     assert exact_dedup_groups(big).count() == K * exact_dedup_groups(base).count()
 
-    pairs1 = ngram_jaccard_pairs(base, threshold=0.8, max_doc_freq=1000)
-    pairsK = ngram_jaccard_pairs(big, threshold=0.8, max_doc_freq=1000)
+    pairs1 = ngram_jaccard_pairs(base, threshold=0.8)
+    pairsK = ngram_jaccard_pairs(big, threshold=0.8)
     assert pairsK.count() == K * pairs1.count()
 
     # and the components: same clusters, K tagged instances of each
@@ -52,8 +52,8 @@ def test_clique_inflation_creates_cross_copy_duplicates(spark):
     base = inflate_documents(spark, SF_DIR, 1, "clique").localCheckpoint()
     big = inflate_documents(spark, SF_DIR, K, "clique").localCheckpoint()
     n_docs = base.count()
-    base_pairs = ngram_jaccard_pairs(base, threshold=0.8, max_doc_freq=1000).count()
-    big_pairs = ngram_jaccard_pairs(big, threshold=0.8, max_doc_freq=1000).count()
+    base_pairs = ngram_jaccard_pairs(base, threshold=0.8).count()
+    big_pairs = ngram_jaccard_pairs(big, threshold=0.8).count()
     # every original doc long enough to shingle forms a K-clique;
     # allow the short-doc tail to contribute nothing
     assert big_pairs > K * base_pairs
@@ -76,9 +76,7 @@ def test_prefix_jaccard_tracks_base_under_both_inflations(spark):
         big = inflate_documents(spark, SF_DIR, K, mode).localCheckpoint()
         want = {
             (r.a, r.b, r.jaccard)
-            for r in ngram_jaccard_pairs(
-                big, threshold=0.8, max_doc_freq=None
-            ).collect()
+            for r in ngram_jaccard_pairs(big, threshold=0.8).collect()
         }
         got = {
             (r.a, r.b, r.jaccard)

@@ -3,7 +3,7 @@ inflated corpus and report how wall time scales with data volume.
 
     python tools/scale_smoke.py [K] [sf_dir] [mode]
 
-Three inflation modes, three different stresses:
+Two inflation modes, two different stresses:
 
 - ``disjoint`` (default): every WORD is tagged with the copy index,
   so copies share no shingles — per-copy near-dup structure is
@@ -18,13 +18,13 @@ Three inflation modes, three different stresses:
   the duplicate-heavy-corpus stress (a crawl with mirrored sites):
   the engine must absorb quadratic OUTPUT without quadratic
   intermediate blowup beyond it.
-- ``facts``: fact tables (lineitem/orders/events) key-shifted Kx
-  into a scratch sf-layout directory with dimensions UNchanged (the
-  realistic axis: facts grow, dims don't), then the REGISTERED
-  OLAP/event queries run unmodified against the inflated dir.
 
 Prints one JSON line: {"k": K, "mode": ..., "timings": {op: sec},
 "outputs": {op: rows}}. Compare against a K=1 run of the same build.
+
+The REGISTERED queries run at Kx volume through
+``tools/profile.py --inflate K``, over the sf-layout directory that
+``inflated_dir`` below materializes.
 """
 
 from __future__ import annotations
@@ -41,46 +41,99 @@ import pyspark.sql.functions as F  # noqa: E402
 from dug_data_ingest_spark.session import get_spark  # noqa: E402
 
 
-def inflate_documents(spark, sf_dir: str, k: int, mode: str):
-    base = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    copies = []
+# key offset between copies: it must exceed every source key, or
+# copies collide (corrupting dedup and join results)
+_STEP = 1_000_000_000
+
+
+def _union_copies(base, k: int, replace):
+    """K copies of ``base`` unioned, copy i with the columns of
+    ``replace(i)`` ({name: Column}) swapped in place."""
+    out = None
     for i in range(k):
+        cols = replace(i)
+        copy = base.select(*[cols.get(c, F.col(c)).alias(c) for c in base.columns])
+        out = copy if out is None else out.unionByName(copy)
+    return out
+
+
+def _key_shift(*keys: str):
+    return lambda i: {c: F.col(c) + F.lit(i * _STEP) for c in keys}
+
+
+def inflate_documents(spark, sf_dir: str, k: int, mode: str = "disjoint"):
+    base = spark.read.parquet(f"{sf_dir}/documents.parquet")
+
+    def replace(i: int) -> dict:
         if mode == "clique":
             text = F.concat(F.lit(f"copy{i} "), F.col("text"))
         else:  # disjoint: tag every word so copies share no shingles
             text = F.regexp_replace("text", r"(\S+)", f"c{i}$1")
-        copies.append(
-            base.select(
-                (F.col("doc_id") + F.lit(i * 1_000_000_000)).alias("doc_id"),
-                text.alias("text"),
-                "source",
-                "lang",
-                "n_chars",
-            )
-        )
-    out = copies[0]
-    for c in copies[1:]:
-        out = out.unionByName(c)
-    return out
+        return {**_key_shift("doc_id")(i), "text": text}
+
+    return _union_copies(base, k, replace)
 
 
 def inflate_embeddings(spark, sf_dir: str, k: int):
     base = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    copies = [
-        base.select(
-            (F.col("vec_id") + F.lit(i * 1_000_000_000)).alias("vec_id"),
+    return _union_copies(
+        base,
+        k,
+        lambda i: {
+            **_key_shift("vec_id")(i),
             # shift one coordinate per copy so copies are not exact
             # duplicates in embedding space either
-            F.transform(
+            "embedding": F.transform(
                 "embedding", lambda x, p: x + F.lit(0.001 * i) * (p == 0).cast("float")
-            ).alias("embedding"),
-            "label",
+            ),
+        },
+    )
+
+
+# the key columns each inflated table shifts per copy; orders and
+# lineitem shift their order key by the same step, so every copy's
+# lineitems join to that copy's orders
+_KEYS = {
+    "documents": ("doc_id",),
+    "orders": ("o_orderkey",),
+    "lineitem": ("l_orderkey",),
+    "events": ("event_id", "user_id"),
+}
+_UNCHANGED = ("region", "nation", "customer", "supplier", "part", "embeddings")
+
+
+def inflated_dir(spark, sf_dir: str, k: int, fresh: bool = False) -> str:
+    """Materialize a Kx sf-layout directory the REGISTERED queries run
+    against unmodified: documents in ``disjoint`` copies
+    (inflate_documents), the fact tables key-shifted K times, and the
+    dimension tables and embeddings copied as they are (facts grow,
+    dims do not). A complete directory is reused unless ``fresh``."""
+    from dug_data_ingest_spark.sources import scratch_dir
+
+    # tag the cache dir with the SOURCE sf so a run against a
+    # different scale factor can never reuse the wrong fixture
+    # (the _events_partitioned convention, queries/sources.py)
+    tag = "".join(c if c.isalnum() else "_" for c in sf_dir.strip("/").split("/")[-1])
+    out = scratch_dir(f"inflated-{tag}-{k}", fresh=fresh)
+    marker = os.path.join(out, "_READY")
+    if os.path.exists(marker):
+        return out
+
+    def base(t: str):
+        return spark.read.parquet(f"{sf_dir}/{t}.parquet")
+
+    plans = {t: base(t) for t in _UNCHANGED}
+    for t, keys in _KEYS.items():
+        top = max(v or 0 for v in base(t).agg(*[F.max(c) for c in keys]).first())
+        assert top < _STEP, f"{t} key {top} >= {_STEP}: raise the copy offset"
+        plans[t] = (
+            inflate_documents(spark, sf_dir, k)
+            if t == "documents"
+            else _union_copies(base(t), k, _key_shift(*keys))
         )
-        for i in range(k)
-    ]
-    out = copies[0]
-    for c in copies[1:]:
-        out = out.unionByName(c)
+    for t, df in plans.items():
+        df.write.mode("overwrite").parquet(os.path.join(out, f"{t}.parquet"))
+    open(marker, "w").close()
     return out
 
 
@@ -88,13 +141,9 @@ def main() -> int:
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     mode = sys.argv[3] if len(sys.argv) > 3 else "disjoint"
-    if mode not in ("disjoint", "clique", "facts"):
-        raise SystemExit(f"unknown mode {mode!r}: use disjoint|clique|facts")
+    if mode not in ("disjoint", "clique"):
+        raise SystemExit(f"unknown mode {mode!r}: use disjoint|clique")
     spark = get_spark("scale-smoke")
-    if mode == "facts":
-        res = run_facts(spark, sf_dir, k)
-        print(json.dumps({"k": k, "mode": mode, **res}))
-        return 0
 
     from dug_data_ingest_spark.ext.dedup import (
         doc_shingles,
@@ -104,7 +153,7 @@ def main() -> int:
         minhash_band_keys,
         minhash_candidate_pairs,
         minhash_signatures_wide,
-        ngram_jaccard_pairs,
+        ngram_containment_pairs,
         ngram_jaccard_pairs_prefix,
         simhash64,
     )
@@ -126,10 +175,10 @@ def main() -> int:
             # the fused sketch path the graded query uses
             minhash_band_keys(minhash_signatures_wide(doc_shingles(docs)))
         ).count(),
-        # the df-capped shared-shingle join: still the graded shape for
-        # dedup-containment and the incremental-dedup batch×corpus join
-        "dedup-ngram-jaccard": lambda: ngram_jaccard_pairs(
-            docs, threshold=0.8, max_doc_freq=1000
+        # the df-capped shared-shingle join, as the graded
+        # dedup-containment slug runs it (threshold 0.9, cap 100)
+        "dedup-containment": lambda: ngram_containment_pairs(
+            docs, threshold=0.9, max_doc_freq=100
         ).count(),
         # exact-semantics prefix-filtered path (the graded
         # dedup-ngram-jaccard shape since r10): under 'disjoint' the
@@ -217,84 +266,6 @@ def main() -> int:
         )
     )
     return 0
-
-
-
-
-# --- fact-table axis: OLAP/events at Kx fact volume, dims fixed -------------
-
-
-def _facts_dir(spark, sf_dir: str, k: int) -> str:
-    """Materialize a Kx sf-layout directory: fact tables (lineitem,
-    orders, events) key-shifted Kx, dimension tables copied as-is —
-    the realistic scale axis (facts grow, dims do not), letting the
-    REGISTERED queries run unmodified against the inflated dir."""
-    from dug_data_ingest_spark.sources import scratch_dir
-
-    # tag the cache dir with the SOURCE sf so a run against a
-    # different scale factor can never reuse the wrong fixture
-    # (the _events_partitioned convention, queries/sources.py)
-    tag = "".join(c if c.isalnum() else "_" for c in sf_dir.strip("/").split("/")[-1])
-    out = scratch_dir(f"scale-smoke-facts-{tag}-{k}", fresh=False)
-    marker = os.path.join(out, "_READY")
-    if os.path.exists(marker):
-        return out
-
-    def copies(df, shifts: dict):
-        parts = []
-        for i in range(k):
-            c = df
-            for col, step in shifts.items():
-                c = c.withColumn(col, F.col(col) + F.lit(i * step))
-            parts.append(c)
-        u = parts[0]
-        for c in parts[1:]:
-            u = u.unionByName(c)
-        return u
-
-    base = lambda t: spark.read.parquet(f"{sf_dir}/{t}.parquet")  # noqa: E731
-    plans = {
-        "lineitem": copies(base("lineitem"), {"l_orderkey": 1_000_000_000}),
-        "orders": copies(base("orders"), {"o_orderkey": 1_000_000_000}),
-        "events": copies(
-            base("events"),
-            {"event_id": 1_000_000_000, "user_id": 10_000_000},
-        ),
-    }
-    for t in ("region", "nation", "customer", "supplier", "part",
-              "documents", "embeddings"):
-        plans[t] = base(t)
-    for t, df in plans.items():
-        df.write.mode("overwrite").parquet(os.path.join(out, f"{t}.parquet"))
-    open(marker, "w").close()
-    return out
-
-
-FACT_QUERIES = [
-    "olap-pricing-summary",      # Q1: scan-heavy single agg
-    "olap-revenue-by-nation",    # Q5: broadcast-dim star join
-    "olap-topn-per-group",       # window over rollup
-    "olap-order-priority",       # Q4: fact-fact semi join
-    "agg-groupby-dtid",          # keyed agg on the fact
-    "events-sessionize",         # gaps-and-islands window
-    "win-running-total",         # running window on events
-    "events-retention",          # per-user set aggregation
-]
-
-
-def run_facts(spark, sf_dir: str, k: int) -> dict:
-    from dug_data_ingest_spark.queries import all_queries
-
-    qs = all_queries()
-    d = _facts_dir(spark, sf_dir, k)
-    timings, outputs = {}, {}
-    for name in FACT_QUERIES:
-        fn = qs[name]
-        fn(spark, d).count()  # warm
-        t0 = time.perf_counter()
-        outputs[name] = fn(spark, d).count()
-        timings[name] = round(time.perf_counter() - t0, 3)
-    return {"timings": timings, "outputs": outputs}
 
 
 if __name__ == "__main__":
