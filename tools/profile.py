@@ -40,6 +40,7 @@ import json
 import os
 import sys
 import time
+import traceback
 
 # Run as a script, sys.path[0] is tools/, where this file would shadow
 # the stdlib ``profile`` module that cProfile (imported by pyspark) loads.
@@ -160,6 +161,7 @@ def profile(spark, slugs: list[str], sf_dir: str, k: int = 1, reps: int = 3,
         try:
             res = profile_slug(spark, reader, procs, slug, run_dir, reps, sink)
         except Exception as exc:  # noqa: BLE001 — one broken slug, keep going
+            traceback.print_exc()
             res = {"error": f"{type(exc).__name__}: {exc}"[:500]}
         out.append({"slug": slug, **tags, **res})
         print(f"{slug}: {res.get('error') or [r['build_s'] + r['action_s'] for r in res['reps']]}",

@@ -125,7 +125,8 @@ def inflated_dir(spark, sf_dir: str, k: int, fresh: bool = False) -> str:
     plans = {t: base(t) for t in _UNCHANGED}
     for t, keys in _KEYS.items():
         top = max(v or 0 for v in base(t).agg(*[F.max(c) for c in keys]).first())
-        assert top < _STEP, f"{t} key {top} >= {_STEP}: raise the copy offset"
+        if top >= _STEP:
+            raise ValueError(f"{t} key {top} >= {_STEP}: raise the copy offset")
         plans[t] = (
             inflate_documents(spark, sf_dir, k)
             if t == "documents"
