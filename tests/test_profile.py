@@ -1,4 +1,4 @@
-"""tools/profile.py: the row it writes per slug, its job accounting
+"""tools/profile_slugs.py: the row it writes per slug, its job accounting
 against the status tracker, and the Kx inflated directory it profiles
 against (tools/scale_smoke.py::inflated_dir). Runs at sf0.001."""
 
@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from tests.conftest import TEST_SF_DIR
 from tests.test_job_budget import JOB_BUDGET
-from tools.profile import profile
+from tools.profile_slugs import profile
 from tools.scale_smoke import _STEP, inflated_dir
 
 REP_KEYS = {"build_s", "action_s", "build_jobs", "action_jobs", "cpu_s"}

@@ -1,8 +1,8 @@
 """Layered per-slug profile: construction vs action, per-stage Spark
 counters and process-tree CPU, one JSONL row per slug on stdout.
 
-    python tools/profile.py SLUG... [--sf DIR] [--inflate K] [--reps N]
-                            [--sink count|noop]
+    python tools/profile_slugs.py SLUG... [--sf DIR] [--inflate K]
+                                  [--reps N] [--sink count|noop]
 
 A SLUG is a registered query or a named set: ``HEADLINE``
 (``bench.HEADLINE``, the bench's timed set) or ``HEAVY`` (the
@@ -42,14 +42,11 @@ import sys
 import time
 import traceback
 
-# Run as a script, sys.path[0] is tools/, where this file would shadow
-# the stdlib ``profile`` module that cProfile (imported by pyspark) loads.
-_TOOLS = os.path.dirname(os.path.abspath(__file__))
-sys.path[:] = [p for p in sys.path if os.path.abspath(p or ".") != _TOOLS]
-sys.path.insert(0, os.path.dirname(_TOOLS))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
 from perfbench.engine import ProcTree, StageReader  # noqa: E402
+from tools.scale_smoke import inflated_dir  # noqa: E402
 
 # The heaviest registered slugs over documents, events and lineitem,
 # profiled at 10x volume (``--inflate 10``) whenever one of them changes.
@@ -145,8 +142,6 @@ def profile(spark, slugs: list[str], sf_dir: str, k: int = 1, reps: int = 3,
             sink: str = "count") -> list[dict]:
     """One row per slug (see the module docstring); a slug that raises
     gets an ``error`` row and the run goes on."""
-    from tools.scale_smoke import inflated_dir
-
     run_dir = inflated_dir(spark, sf_dir, k) if k > 1 else sf_dir
     reader, procs = StageReader(spark), ProcTree()
     tags = {
@@ -177,7 +172,7 @@ def main(argv: list[str] | None = None) -> int:
     from dug_data_ingest_spark.queries import all_queries
     from dug_data_ingest_spark.session import get_spark
 
-    p = argparse.ArgumentParser(prog="profile.py", description=__doc__.split("\n\n")[0])
+    p = argparse.ArgumentParser(prog="profile_slugs.py", description=__doc__.split("\n\n")[0])
     p.add_argument("slugs", nargs="+", metavar="SLUG", help="slug or HEADLINE / HEAVY")
     sf_default = os.environ.get("SPARK_GRAFT_SF_DIR")
     p.add_argument("--sf", default=sf_default, required=sf_default is None, metavar="DIR")

@@ -23,7 +23,7 @@ Prints one JSON line: {"k": K, "mode": ..., "timings": {op: sec},
 "outputs": {op: rows}}. Compare against a K=1 run of the same build.
 
 The REGISTERED queries run at Kx volume through
-``tools/profile.py --inflate K``, over the sf-layout directory that
+``tools/profile_slugs.py --inflate K``, over the sf-layout directory that
 ``inflated_dir`` below materializes.
 """
 
