@@ -250,41 +250,6 @@ def history_tags(cpus: int) -> dict:
     return {"cpus": cpus, "git_sha": sha}
 
 
-def best_prior(prior: list, timings: dict, sf_val, cpus: int, cur_calib):
-    """The prior run this one compares best against, as
-    ``(adjusted_ratio, n_shared, prior_total, raw_ratio)``, or None.
-
-    Only runs at the same sf AND the same core count pair up (a line
-    without ``cpus`` is skipped: its core count is unknown). The
-    comparison is restricted to the queries BOTH runs timed (a
-    108-query total vs a 35-query-era total is apples-to-oranges —
-    the round-6 false alarm) and normalized by the calib_spark
-    machine-speed anchor when both runs carry one (the shared host
-    drifts 1.3-1.8x under tenant load)."""
-    best = None
-    for p in prior:
-        if (
-            p.get("sf") != sf_val
-            or p.get("cpus") != cpus
-            or not isinstance(p.get("queries"), dict)
-        ):
-            continue
-        shared = [q for q in timings if q in p["queries"]]
-        # demand real overlap: a comparison over a sliver of the
-        # current set says nothing about this run
-        if len(shared) < max(10, len(timings) // 2):
-            continue
-        pri_t = sum(p["queries"][q] for q in shared)
-        if pri_t <= 0:
-            continue
-        raw = sum(timings[q] for q in shared) / pri_t
-        p_calib = p.get("calib_spark_sec")
-        adj = raw / (cur_calib / p_calib) if cur_calib and p_calib else raw
-        if best is None or adj < best[0]:
-            best = (adj, len(shared), round(pri_t, 3), round(raw, 3))
-    return best
-
-
 def calib(spark) -> dict[str, float]:
     """Machine-speed calibration anchor: the shared host's per-core
     throughput drifts 1.3-1.6x BETWEEN runs under external tenant load
@@ -321,6 +286,41 @@ def sf_value(sf_dir: str) -> float | None:
         return float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
         return None
+
+
+def best_prior(prior: list, timings: dict, sf_val, cpus: int, cur_calib):
+    """The prior run this one compares best against, as
+    ``(adjusted_ratio, n_shared, prior_total, raw_ratio)``, or None.
+
+    Only runs at the same sf AND the same core count pair up (a line
+    without ``cpus`` is skipped: its core count is unknown). The
+    comparison is restricted to the queries BOTH runs timed (a
+    108-query total vs a 35-query-era total is apples-to-oranges —
+    the round-6 false alarm) and normalized by the calib_spark
+    machine-speed anchor when both runs carry one (the shared host
+    drifts 1.3-1.8x under tenant load)."""
+    best = None
+    for p in prior:
+        if (
+            p.get("sf") != sf_val
+            or p.get("cpus") != cpus
+            or not isinstance(p.get("queries"), dict)
+        ):
+            continue
+        shared = [q for q in timings if q in p["queries"]]
+        # demand real overlap: a comparison over a sliver of the
+        # current set says nothing about this run
+        if len(shared) < max(10, len(timings) // 2):
+            continue
+        pri_t = sum(p["queries"][q] for q in shared)
+        if pri_t <= 0:
+            continue
+        raw = sum(timings[q] for q in shared) / pri_t
+        p_calib = p.get("calib_spark_sec")
+        adj = raw / (cur_calib / p_calib) if cur_calib and p_calib else raw
+        if best is None or adj < best[0]:
+            best = (adj, len(shared), round(pri_t, 3), round(raw, 3))
+    return best
 
 
 def main() -> None:
